@@ -10,7 +10,7 @@ every round makes progress and the loop terminates.
 
 This is the fourth distinct vertex program the runner executes (after
 min-propagation CC/SSSP, sum-propagation PageRank, mode-propagation
-LPA) — same combine_min data plane, new decision logic, zero runner
+LPA) — same `combine="min"` data plane, new decision logic, zero runner
 changes: evidence the AlgorithmSpec surface generalizes as the
 reference's ``Compute()`` extension point does (Vertex.go:68-88).
 
@@ -36,12 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_min,
-    combine_min_slim,
-    recombine_min,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
 OUT_SENTINEL = float(2**48)
 
@@ -79,9 +74,7 @@ def mis_spec(max_supersteps: int = 32) -> AlgorithmSpec:
         name="mis",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_min,
-        combine_slim=combine_min_slim,
-        recombine=recombine_min,
+        combine="min",
         apply_fn=apply_fn,
         # every vertex must hear from ALL neighbors every round (a
         # frontier of changed-only senders would hide still-undecided

@@ -22,12 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_sum,
-    combine_sum_slim,
-    recombine_sum,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
 
 def pagerank_spec(num_vertices: int, damping: float = 0.85, tol: float = 1e-6) -> AlgorithmSpec:
@@ -45,9 +40,8 @@ def pagerank_spec(num_vertices: int, damping: float = 0.85, tol: float = 1e-6) -
         return value * weight
 
     def apply_fn(old, msg, g):
-        # g["dangling_mass"] arrives as a Column (a literal by default, or
-        # a broadcast 1-row column under PREGEL_GLOBALS_MODE=column — see
-        # runner._one_superstep for the measured tradeoff)
+        # g["dangling_mass"] arrives as a Column: a per-superstep literal,
+        # or an in-plan aggregate on chained steps 2..K of a block
         dm = g.get("dangling_mass", F.lit(0.0))
         return F.lit((1.0 - d) / n) + F.lit(d) * (
             F.coalesce(msg, F.lit(0.0)) + dm / F.lit(n)
@@ -60,9 +54,7 @@ def pagerank_spec(num_vertices: int, damping: float = 0.85, tol: float = 1e-6) -
         name="pagerank",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_sum,
-        combine_slim=combine_sum_slim,
-        recombine=recombine_sum,
+        combine="sum",
         apply_fn=apply_fn,
         active_fn=active_fn,
         static_cols=("is_dangling",),
@@ -109,9 +101,7 @@ def personalized_pagerank_spec(damping: float = 0.85, tol: float = 1e-6) -> Algo
         name="personalized_pagerank",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_sum,
-        combine_slim=combine_sum_slim,
-        recombine=recombine_sum,
+        combine="sum",
         apply_fn=apply_fn,
         active_fn=active_fn,
         static_cols=("is_dangling", "_p"),

@@ -32,12 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
-from pregel_golang_implementation_spark.plans.spec import (
-    AlgorithmSpec,
-    combine_min,
-    combine_min_slim,
-    recombine_min,
-)
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
 INF = float("inf")
 
@@ -65,9 +60,7 @@ def earliest_arrival_spec(source: int, max_supersteps: int = 64) -> AlgorithmSpe
         name="earliest_arrival",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_min,
-        combine_slim=combine_min_slim,
-        recombine=recombine_min,
+        combine="min",
         apply_fn=apply_fn,
         active_fn=active_fn,
         use_frontier=True,

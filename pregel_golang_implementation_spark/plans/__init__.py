@@ -1,9 +1,7 @@
 from pregel_golang_implementation_spark.plans.spec import (
+    COMBINERS,
     AlgorithmSpec,
-    combine_max,
-    combine_min,
-    combine_mode,
-    combine_sum,
+    combine_messages,
 )
 from pregel_golang_implementation_spark.plans.runner import PregelRunner, PregelResult, SuperstepMetrics
 
@@ -12,8 +10,6 @@ __all__ = [
     "PregelRunner",
     "PregelResult",
     "SuperstepMetrics",
-    "combine_min",
-    "combine_max",
-    "combine_sum",
-    "combine_mode",
+    "COMBINERS",
+    "combine_messages",
 ]

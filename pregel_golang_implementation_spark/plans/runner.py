@@ -36,7 +36,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
+from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_messages
 
 STATE_SCHEMA_DOC = "state(id: long, value: double, active: boolean, *static)"
 MAX_STEPS_PER_ACTION = 6  # in-block plan doubles per chained step
@@ -164,13 +164,11 @@ class PregelRunner:
         self.broadcast_frontier_threshold = broadcast_frontier_threshold
         # explicit skew splitting of hub inboxes (north_rule; SURVEY.md §4
         # P7 — the reference routes the whole inbox of a hub to one worker,
-        # Worker.go:821). Requires an algebraic spec.recombine and
-        # non-negative vertex ids (the salted key space is negative).
+        # Worker.go:821). Every combiner is saltable (combine_messages);
+        # requires non-negative vertex ids (the salted key space is negative).
         self.salt_degree_threshold = salt_degree_threshold
         self.num_salts = num_salts
-        self._salting = bool(salt_degree_threshold) and (
-            spec.recombine is not None or spec.salted_combine is not None
-        )
+        self._salting = bool(salt_degree_threshold)
         self._edges_cached: DataFrame | None = None
         # chain K supersteps into ONE job (each still reports exact
         # metrics via its own Observation): the superstep barrier only
@@ -185,7 +183,7 @@ class PregelRunner:
         # Specs WITH global_aggs (PageRank's dangling mass) chain too:
         # the first step of each block reads the previous block's exact
         # globals off its Observation (driver literals — the fast path,
-        # see the A/B note in _one_superstep); each FURTHER chained step
+        # see the ApplyFn note in plans/spec.py); each FURTHER chained step
         # computes the globals in-plan as a broadcast 1-row aggregate of
         # the previous step's frame, so the block still needs only one
         # action. Globals are then only available to apply_fn — a msg_fn
@@ -216,23 +214,17 @@ class PregelRunner:
             )
             steps_per_action = MAX_STEPS_PER_ACTION
         self.steps_per_action = max(1, steps_per_action)
-        # SLIM combine exchange (scale lever): when the spec provides a
-        # count-free combiner, the messages-sent counter (O21) rides a
+        # SLIM combine exchange: the messages-sent counter (O21) rides a
         # CollectMetrics Observation on the PRE-shuffle message frame and
-        # the msg_count partial is dropped from the exchange row —
-        # (id, msg, count) → (id, msg), 8 fewer bytes/row through the only
-        # per-superstep shuffle, with metrics still exact.  Eligible only
-        # unsalted (recombine merges count partials) and unchained: a
-        # CollectMetrics inside a chained step's lazy localCheckpoint
-        # belongs to an inner query execution and reports ZEROS (measured,
-        # r4) — so chained blocks keep the in-combine count.
-        # PREGEL_SLIM_SHUFFLE=0 forces the classic path for A/Bs.
-        self.slim_shuffle = (
-            os.environ.get("PREGEL_SLIM_SHUFFLE", "1") != "0"
-            and spec.combine_slim is not None
-            and not self._salting
-            and self.steps_per_action == 1
-        )
+        # the combine ships no msg_count — (id, msg, count) → (id, msg),
+        # 8 fewer bytes/row through the only per-superstep shuffle, with
+        # metrics still exact (salting rewrites hub dst ids but never adds
+        # or drops an edge, so the pre-shuffle count is unchanged).
+        # Unchained runs only: a CollectMetrics inside a chained step's
+        # lazy localCheckpoint belongs to an inner query execution and
+        # reports ZEROS (measured, r4) — so chained blocks count in the
+        # combine.
+        self.slim_shuffle = self.steps_per_action == 1
 
     # ----------------------------------------------------------------- setup
 
@@ -249,7 +241,7 @@ class PregelRunner:
         if self._salting:
             # salted hub keys live in the NEGATIVE id space — a graph that
             # already uses negative ids would be silently corrupted (real
-            # negative ids get unsalted/recombined as hub partials). Fail
+            # negative ids get unsalted and re-merged as hub partials). Fail
             # loudly instead: one cheap agg over the raw edges, once per run.
             row = e.agg(F.min("src").alias("_ms"), F.min("dst").alias("_md")).first()
             lo = min(row["_ms"] or 0, row["_md"] or 0)
@@ -266,9 +258,12 @@ class PregelRunner:
         # The layout is sorted within partitions so the cached edge order
         # is a function of the DATA, not of shuffle-fetch interleaving:
         # every float message-sum downstream accumulates in edge order, so
-        # this is what makes two runs of the same graph (slim vs classic
-        # combine, chained vs unchained, resume vs cold) bit-identical
-        # regardless of how the CALLER's prep plan happened to order rows.
+        # in LOCAL mode this is what makes two runs of the same graph
+        # (chained vs unchained, resume vs cold) bit-identical regardless
+        # of how the CALLER's prep plan happened to order rows.  On a
+        # cluster the guarantee ends at the shuffle: the reduce side merges
+        # partial sums in shuffle-fetch arrival order, which is not fixed,
+        # so float sums may differ in the last ulp from run to run.
         # One per-partition sort, once per run, amortized over every
         # superstep; the per-step joins are hash-based and don't need it.
         order = e.columns  # total order over every column ⇒ ties can't reorder
@@ -391,33 +386,13 @@ class PregelRunner:
             # totalled, without shipping a count per combined row
             msgs = msgs.observe(msg_obs, F.count(F.lit(1)).alias("_msgs_sent"))
         # combine: sender-side partial agg + final agg — the exchange shuffle
+        unsalt = None
         if self._salting:
             from pregel_golang_implementation_spark.sources.graphs import unsalt_ids
 
             unsalt = lambda df: unsalt_ids(df, id_col="id", num_salts=self.num_salts)  # noqa: E731
-            if spec.salted_combine is not None:
-                # non-algebraic combiner (mode): the spec owns the whole
-                # salted combine, carrying count partials across unsalt
-                combined = spec.salted_combine(msgs, unsalt)
-            else:
-                # algebraic combiner: hub inboxes were split across
-                # num_salts reducer keys (negative id space); unsalt ALL
-                # ids (non-hub ids pass through unchanged) and re-merge in
-                # ONE second-level aggregate over ~V partial rows.  A
-                # filter/union formulation evaluates the first aggregate
-                # twice (one reduce stage per filter branch behind the
-                # ReusedExchange) and its union output loses hash
-                # partitioning, forcing the apply join to re-shuffle —
-                # measured 2-3× slower per superstep on the Zipf skew
-                # bench.  Here the recombine groupBy("id") output is
-                # hash-partitioned on id, so the apply join stays
-                # co-partitioned.
-                combined = spec.recombine(unsalt(spec.combine(msgs)))
-        elif msg_obs is not None:
-            combined = spec.combine_slim(msgs)
-        else:
-            combined = spec.combine(msgs)
-        has_count = "msg_count" in combined.columns
+        has_count = msg_obs is None
+        combined = combine_messages(msgs, spec.combine, has_count, unsalt)
 
         # apply: fold inbox into state (replaces Vertex.go:68-88); both
         # sides partitioned by id → shuffle-hash, no sort
@@ -439,23 +414,8 @@ class PregelRunner:
                 k: F.coalesce(F.col(f"_g_{k}"), F.lit(0.0))
                 for k in spec.global_aggs
             }
-        elif spec.global_aggs and os.environ.get("PREGEL_GLOBALS_MODE", "literal") == "column":
-            # alternative: globals as a broadcast 1-row frame (keeps the
-            # generated code value-independent). MEASURED SLOWER here: the
-            # per-step broadcast exchange + nested-loop join costs more
-            # than the codegen recompile that per-step literals cause
-            # (A/B on 19M edges, local[16]: literal ~3s/step steady vs
-            # column 5-33s/step). Kept as an escape hatch for real
-            # clusters where driver-side codegen compile is the scarcer
-            # resource.
-            gdf = self.spark.createDataFrame(
-                [tuple(float(g[k] or 0.0) for k in spec.global_aggs)],
-                schema=[f"_g_{k}" for k in spec.global_aggs],
-            )
-            joined = joined.join(F.broadcast(gdf))
-            gcols = {k: F.col(f"_g_{k}") for k in spec.global_aggs}
         else:
-            # per-superstep scalars as literals (default)
+            # per-superstep scalars as literals (see ApplyFn in plans/spec.py)
             gcols = {k: F.lit(float(g[k] or 0.0)) for k in spec.global_aggs}
         new_value = spec.apply_fn(F.col("value"), F.col("msg"), gcols)
         nmsg = (

@@ -26,121 +26,75 @@ from pyspark.sql import functions as F
 
 # (src_value, edge_weight, globals as python floats) -> message value
 MsgFn = Callable[[Column, Column, dict], Column]
-# msgs DataFrame(id, msg) -> DataFrame(id, msg, msg_count); exactly one row per id
-CombineFn = Callable[[DataFrame], DataFrame]
 # (old_value, combined_msg_or_null, globals as COLUMNS) -> new value.
-# Globals reach apply as Column expressions: per-superstep F.lit()
-# literals BY DEFAULT — measured faster here despite recompiling codegen
-# every superstep — with a broadcast 1-row-frame column mode behind
-# PREGEL_GLOBALS_MODE=column for clusters where driver-side compilation
-# is the scarcer resource.  See the A/B note in runner._one_superstep
-# before "optimizing" either path away.
+# Globals reach apply as per-superstep F.lit() literals (measured faster
+# than a broadcast 1-row globals frame despite recompiling codegen every
+# superstep: ~3 s/step vs 5-33 s/step on 19M edges, local[16]); chained
+# steps 2..K of a block compute them in-plan instead (see runner).
 ApplyFn = Callable[[Column, Column, dict], Column]
 # (old_value, new_value, combined_msg_or_null) -> active boolean
 ActiveFn = Callable[[Column, Column, Column], Column]
 # state DataFrame -> scalar aggregate Column (computed once per superstep)
 GlobalAgg = Callable[[], Column]
 
-
-def combine_min(msgs: DataFrame) -> DataFrame:
-    """min-combiner (SSSP/CC).  The reference folds min at the receiver only
-    (Vertex.go:71-80); Spark's partial+final hash aggregation gives the
-    sender-side combine the reference lacks (SURVEY.md §4 P2)."""
-    return msgs.groupBy("id").agg(
-        F.min("msg").alias("msg"), F.count(F.lit(1)).alias("msg_count")
-    )
+# The message combiners a spec can name.  The reference folds its inbox
+# at the receiver only (Vertex.go:71-80); here every combiner is an
+# aggregate Spark partial-combines map-side (SURVEY.md §4 P2).
+COMBINERS = ("min", "sum", "mode")
 
 
-# Slim combiners: same aggregate WITHOUT the msg_count column.  The count
-# exists only to feed the messages-sent counter (O21); when the runner can
-# take that count from an Observation on the pre-shuffle message frame
-# instead (steps_per_action=1 — see PregelRunner), dropping the count
-# partial cuts the exchange row from (id, msg, count) to (id, msg): 8
-# fewer bytes/row through the ONLY per-superstep shuffle.
+def combine_messages(
+    msgs: DataFrame,
+    op: str,
+    with_count: bool,
+    unsalt: Optional[Callable[[DataFrame], DataFrame]] = None,
+) -> DataFrame:
+    """Fold the inbox: DataFrame(id, msg) -> (id, msg [, msg_count]),
+    exactly one row per id.
 
-def combine_min_slim(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(F.min("msg").alias("msg"))
+    ``op`` is one of ``COMBINERS``:
+      - ``min``/``sum``: one algebraic aggregate.
+      - ``mode``: most frequent message, ties → smallest value.  Counts
+        per (id, msg), then the winner is max by (cnt, -msg) as ONE
+        aggregate (struct ordering is field-lexicographic).  No window:
+        an aggregate partial-combines map-side and has no per-id sort, so
+        a hub whose inbox holds millions of distinct labels costs one
+        running max per map partition, not a single-task sort.
 
+    ``with_count`` adds ``msg_count`` (messages folded into the row).  It
+    only feeds the messages-sent counter, so the runner asks for it only
+    when it cannot count on the pre-shuffle frame instead; without it the
+    exchange row is (id, msg), 8 bytes/row lighter.
 
-def combine_max_slim(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(F.max("msg").alias("msg"))
-
-
-def combine_sum_slim(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(F.sum("msg").alias("msg"))
-
-
-def combine_max(msgs: DataFrame) -> DataFrame:
-    return msgs.groupBy("id").agg(
-        F.max("msg").alias("msg"), F.count(F.lit(1)).alias("msg_count")
-    )
-
-
-def combine_sum(msgs: DataFrame) -> DataFrame:
-    """sum-combiner (PageRank mass accumulation)."""
-    return msgs.groupBy("id").agg(
-        F.sum("msg").alias("msg"), F.count(F.lit(1)).alias("msg_count")
-    )
-
-
-def _mode_argmax(counts: DataFrame) -> DataFrame:
-    """(id, msg, cnt) partial counts → (id, msg, msg_count): the winner
-    is max by (cnt, -msg), i.e. most frequent label with deterministic
-    ties → smallest label, as ONE algebraic aggregate (struct ordering
-    is field-lexicographic).  Replaces the earlier row_number window:
-    an aggregate partial-combines map-side and has no per-id sort, so a
-    hub vertex whose inbox holds millions of distinct labels costs one
-    running max per map partition instead of a single-task sort of all
-    its (label, count) rows — the window was the last reducer-skew
-    point in the LPA plan."""
-    return (
-        counts.groupBy("id").agg(
-            F.max(F.struct(F.col("cnt"), (-F.col("msg")).alias("_neg"))).alias("_w"),
-            F.sum("cnt").alias("msg_count"),
+    ``unsalt`` (hub salting) maps salted ids back to real ids.  Hub inboxes
+    were split across salt replicas in the negative id space; ALL partials
+    are unsalted (non-hub ids pass through) and re-merged in ONE
+    second-level aggregate over ~V rows, whose groupBy("id") output stays
+    hash-partitioned for the apply join.  A filter/union formulation runs
+    the first aggregate twice and loses that partitioning — measured 2-3×
+    slower per superstep on the Zipf skew bench.  Mode winners can't be merged across replicas, so mode carries its
+    (msg, cnt) partials across the unsalt boundary and re-sums them."""
+    if op == "mode":
+        counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
+        if unsalt is not None:
+            counts = unsalt(counts).groupBy("id", "msg").agg(F.sum("cnt").alias("cnt"))
+        aggs = [F.max(F.struct(F.col("cnt"), (-F.col("msg")).alias("_neg"))).alias("_w")]
+        if with_count:
+            aggs.append(F.sum("cnt").alias("msg_count"))
+        return counts.groupBy("id").agg(*aggs).select(
+            "id", (-F.col("_w._neg")).alias("msg"), *(["msg_count"] if with_count else [])
         )
-        .select("id", (-F.col("_w._neg")).alias("msg"), "msg_count")
-    )
-
-
-def combine_mode(msgs: DataFrame) -> DataFrame:
-    """mode-combiner (label propagation): most frequent message value,
-    deterministic ties → smallest value.  Two chained algebraic
-    aggregates — count per (id, label), then argmax per id — both
-    map-side combinable, no window, no Python."""
-    counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
-    return _mode_argmax(counts)
-
-
-def salted_combine_mode(msgs: DataFrame, unsalt) -> DataFrame:
-    """Hub-salted mode combine (LPA).  Mode winners can't be merged
-    across salt replicas — merging two groups' winners loses the counts
-    — so the salted path carries (label, count) PARTIALS across the
-    unsalt boundary, not winners:
-
-      1. count labels per SALTED key — the heavy message shuffle, with a
-         hub's inbox split across its salt replicas;
-      2. unsalt and re-sum counts per real (id, label) — cardinality is
-         distinct-labels-per-vertex, orders of magnitude below the inbox;
-      3. the same algebraic argmax as ``combine_mode``.
-
-    ``unsalt`` maps salted ids back (provided by the runner)."""
-    counts = msgs.groupBy("id", "msg").agg(F.count(F.lit(1)).alias("cnt"))
-    merged = unsalt(counts).groupBy("id", "msg").agg(F.sum("cnt").alias("cnt"))
-    return _mode_argmax(merged)
-
-
-def recombine_min(partials: DataFrame) -> DataFrame:
-    """Algebraic merge of combine_min partials (salted-hub re-merge)."""
-    return partials.groupBy("id").agg(
-        F.min("msg").alias("msg"), F.sum("msg_count").alias("msg_count")
-    )
-
-
-def recombine_sum(partials: DataFrame) -> DataFrame:
-    """Algebraic merge of combine_sum partials (salted-hub re-merge)."""
-    return partials.groupBy("id").agg(
-        F.sum("msg").alias("msg"), F.sum("msg_count").alias("msg_count")
-    )
+    fold = {"min": F.min, "sum": F.sum}[op]
+    aggs = [fold("msg").alias("msg")]
+    if with_count:
+        aggs.append(F.count(F.lit(1)).alias("msg_count"))
+    out = msgs.groupBy("id").agg(*aggs)
+    if unsalt is not None:
+        aggs = [fold("msg").alias("msg")]
+        if with_count:
+            aggs.append(F.sum("msg_count").alias("msg_count"))
+        out = unsalt(out).groupBy("id").agg(*aggs)
+    return out
 
 
 def default_active(old: Column, new: Column, msg: Column) -> Column:
@@ -162,7 +116,8 @@ class AlgorithmSpec:
     name: str
     init_fn: Callable[[DataFrame], DataFrame]
     msg_fn: MsgFn
-    combine: CombineFn
+    # message combiner, one of COMBINERS (see combine_messages)
+    combine: str
     apply_fn: ApplyFn
     active_fn: ActiveFn = default_active
     static_cols: tuple[str, ...] = ()
@@ -173,23 +128,12 @@ class AlgorithmSpec:
     # name -> state aggregate recomputed each superstep, available to
     # msg_fn/apply_fn via the globals dict (e.g. PageRank dangling mass).
     global_aggs: dict[str, Column] = field(default_factory=dict)
-    # Re-merge function for salted hub partials: DataFrame(id, msg,
-    # msg_count) with several rows per hub id -> one row per id.  Must be
-    # the algebraic merge of `combine` (min→min, sum→sum).  None ⇒ the
-    # combiner is not algebraic (e.g. mode); hub salting then requires
-    # `salted_combine` instead.
-    recombine: Optional[CombineFn] = None
-    # Count-free variant of `combine` returning (id, msg) only — lets the
-    # runner drop the msg_count partial from the exchange when the
-    # messages-sent counter can ride a pre-shuffle Observation instead
-    # (steps_per_action=1, unsalted).  Must aggregate identically to
-    # `combine` minus the count.  None ⇒ always ship the count.
-    combine_slim: Optional[CombineFn] = None
-    # Full replacement of the combine stage under salting, for combiners
-    # whose winners can't be merged (mode): (msgs-with-salted-ids,
-    # unsalt_fn) -> combined (id, msg, msg_count) on REAL ids, carrying
-    # whatever partials the combiner needs across the unsalt boundary
-    # (see salted_combine_mode).  Takes precedence over recombine.
-    salted_combine: Optional[Callable[[DataFrame, Callable], DataFrame]] = None
     max_supersteps: int = 200
     params: dict = field(default_factory=dict)
+
+    def __post_init__(self):
+        if self.combine not in COMBINERS:
+            raise ValueError(
+                f"AlgorithmSpec {self.name!r}: combine must be one of "
+                f"{COMBINERS}, got {self.combine!r}"
+            )

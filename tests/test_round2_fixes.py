@@ -361,7 +361,7 @@ def test_weighted_pagerank_uniform_weights_equals_standard(spark):
 
 def test_lpa_hub_salting_matches_unsalted(spark):
     """Mode is not algebraic, so LPA salting routes (label, count)
-    partials across the unsalt boundary (salted_combine_mode). On a hub
+    partials across the unsalt boundary (combine_messages). On a hub
     graph the salted run must give bit-identical labels."""
     from pregel_golang_implementation_spark.operators.label_propagation import (
         label_propagation,

@@ -208,7 +208,7 @@ def test_msg_fn_reading_globals_raises_on_chained_steps(spark):
     """A spec whose msg_fn depends on globals cannot chain — the guard
     must raise a clear error instead of scattering stale values."""
     from pregel_golang_implementation_spark.plans.runner import PregelRunner
-    from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_sum
+    from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
     def init_fn(v):
         return v.select("id", F.lit(1.0).alias("value"))
@@ -220,7 +220,7 @@ def test_msg_fn_reading_globals_raises_on_chained_steps(spark):
         name="needs_globals_in_msg",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_sum,
+        combine="sum",
         apply_fn=lambda old, msg, g: F.coalesce(msg, old),
         global_aggs={"total": F.sum("value")},
         max_supersteps=4,

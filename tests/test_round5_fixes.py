@@ -42,10 +42,7 @@ def test_msg_fn_iterating_globals_raises_on_chained_step(spark):
     """End-to-end: a spec whose msg_fn ITERATES the globals dict (not just
     subscripts it) must raise on chained steps 2..K, not silently scatter
     without globals."""
-    from pregel_golang_implementation_spark.plans.spec import (
-        AlgorithmSpec,
-        combine_sum,
-    )
+    from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
     def init_fn(v):
         return v.select("id", F.lit(1.0).alias("value"))
@@ -60,7 +57,7 @@ def test_msg_fn_iterating_globals_raises_on_chained_step(spark):
         name="iter_globals",
         init_fn=init_fn,
         msg_fn=msg_fn,
-        combine=combine_sum,
+        combine="sum",
         apply_fn=lambda old, msg, g: F.coalesce(msg, old),
         use_frontier=False,
         global_aggs={"total": F.sum("value")},
@@ -218,46 +215,13 @@ def _path_edges(spark, n=20):
     )
 
 
-def test_slim_shuffle_bit_identical_and_metrics_exact(spark, monkeypatch):
-    """Slim mode (count-free combine + pre-shuffle Observation) must give
-    bit-identical state AND identical per-step counters vs classic."""
-    from pregel_golang_implementation_spark.operators.pagerank import (
-        pagerank_spec,
-        prepare_pagerank_graph,
-    )
-    from pregel_golang_implementation_spark.sources.graphs import synthetic_edges
-
-    edges = synthetic_edges(spark, num_vertices=300, avg_degree=4, seed=7)
-    pr_edges, vertices = prepare_pagerank_graph(edges)
-    n = vertices.count()
-
-    def run(slim: str):
-        monkeypatch.setenv("PREGEL_SLIM_SHUFFLE", slim)
-        runner = PregelRunner(spark, pagerank_spec(n), steps_per_action=1)
-        assert runner.slim_shuffle == (slim == "1")
-        return runner.run(pr_edges, vertices=vertices, max_supersteps=4)
-
-    classic = run("0")
-    slim = run("1")
-    a = {r.id: r.value for r in classic.state.collect()}
-    b = {r.id: r.value for r in slim.state.collect()}
-    assert a == b  # bit-identical, not approx
-    assert [m.messages_sent for m in classic.metrics] == [
-        m.messages_sent for m in slim.metrics
-    ]
-    assert [m.active_vertices for m in classic.metrics] == [
-        m.active_vertices for m in slim.metrics
-    ]
-
-
-def test_slim_shuffle_empty_final_frontier_counts_zero(spark, monkeypatch):
+def test_slim_shuffle_empty_final_frontier_counts_zero(spark):
     """The convergence superstep of frontier SSSP sends ZERO messages; AQE
     folds the empty message subtree out of the final plan, taking the
     CollectMetrics with it — the runner must report 0, not crash
     (regression: Py4JJavaError in Observation.get, r5)."""
     from pregel_golang_implementation_spark.operators.sssp import sssp
 
-    monkeypatch.setenv("PREGEL_SLIM_SHUFFLE", "1")
     res = sssp(spark, _path_edges(spark), source=0)
     assert res.converged
     assert res.metrics[-1].messages_sent == 0
@@ -265,14 +229,18 @@ def test_slim_shuffle_empty_final_frontier_counts_zero(spark, monkeypatch):
 
 
 def test_slim_shuffle_ineligible_paths_fall_back(spark):
-    """Salted and chained runners must not enable slim (the recombine
-    merges count partials; a chained step's CollectMetrics lands in an
-    inner query execution and reports zeros)."""
+    """Chained runners must not enable slim (a chained step's
+    CollectMetrics lands in an inner query execution and reports zeros);
+    salted unchained runners are slim (salting keeps the edge count, so
+    the pre-shuffle message count is exact)."""
     from pregel_golang_implementation_spark.operators.pagerank import pagerank_spec
 
     spec = pagerank_spec(100)
     assert PregelRunner(spark, spec, steps_per_action=2).slim_shuffle is False
     assert PregelRunner(
-        spark, spec, salt_degree_threshold=5, num_salts=4
+        spark, spec, salt_degree_threshold=5, num_salts=4, steps_per_action=2
     ).slim_shuffle is False
+    assert PregelRunner(
+        spark, spec, salt_degree_threshold=5, num_salts=4
+    ).slim_shuffle is True
     assert PregelRunner(spark, spec, steps_per_action=1).slim_shuffle is True

@@ -1,6 +1,6 @@
 """A/B per-superstep overhead knobs (r6).  Usage:
   python tools/ab_steps_r6.py <variant>
-variants: base, slim0, lb1, lb3, lb4, sf001, colglobals
+variants: base, lb1, lb3, lb4, sf001
 Prints one JSON line with warm pagerank total + step walls.
 """
 
@@ -13,11 +13,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+VARIANTS = ("base", "lb1", "lb3", "lb4", "sf001")
 variant = sys.argv[1] if len(sys.argv) > 1 else "base"
-if variant == "slim0":
-    os.environ["PREGEL_SLIM_SHUFFLE"] = "0"
-if variant == "colglobals":
-    os.environ["PREGEL_GLOBALS_MODE"] = "column"
+if variant not in VARIANTS:
+    sys.exit(f"unknown variant {variant!r}; expected one of {VARIANTS}")
 
 from pregel_golang_implementation_spark.operators import pagerank
 from pregel_golang_implementation_spark.session import get_spark
