@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 def brandes_forward(
     und_edges: DataFrame, pivots: list[int], hops: int
@@ -75,59 +77,56 @@ def betweenness_sampled(
     δ(id), pairs beyond ``hops`` contributing zero; rounded to 6dp.
     Vertices with zero accumulated dependency are omitted (they are
     never interior to any sampled shortest path)."""
-    # one edge projection probed by every forward hop AND every backward
-    # layer step (2·H consumers) — persist for the call, release after
-    # the (≤ V rows) result is materialized (r6)
-    e = und_edges.select("src", "dst").persist()
-    fwd = brandes_forward(e, pivots, hops)
-    layers = {
-        h: fwd.filter(F.col("dist") == h).localCheckpoint(eager=False)
-        for h in range(hops + 1)
-    }
-    # δ of the deepest layer is 0; walk upward — processing step h turns
-    # layer h's (now-final) δ into layer h−1's δ via the DAG edges
-    delta = layers[hops].select("id", "pv", F.lit(0.0).alias("delta"))
-    finals = []
-    for h in range(hops, 0, -1):
-        # layer-h vertices with σ_w and FINAL δ_w (missing δ = 0: a
-        # layer-h vertex with no deeper successors has zero dependency)
-        succ = layers[h].join(delta, ["id", "pv"], "left").select(
-            "id", "pv", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
-        )
-        finals.append(succ.select("id", "pv", "delta"))
-        # shortest-path DAG edges: u at layer h-1 adjacent to w at layer h
-        delta = (
-            succ.join(e, succ["id"] == e["dst"])
-            .select(
-                F.col("src").alias("id"),
-                "pv",
-                F.col("sigma").alias("_sw"),
-                F.col("delta").alias("_dw"),
+    with pinned() as pins:
+        # one edge projection probed by every forward hop AND every backward
+        # layer step (2·H consumers, r6)
+        e = pins(und_edges.select("src", "dst"))
+        fwd = brandes_forward(e, pivots, hops)
+        layers = {
+            h: fwd.filter(F.col("dist") == h).localCheckpoint(eager=False)
+            for h in range(hops + 1)
+        }
+        # δ of the deepest layer is 0; walk upward — processing step h turns
+        # layer h's (now-final) δ into layer h−1's δ via the DAG edges
+        delta = layers[hops].select("id", "pv", F.lit(0.0).alias("delta"))
+        finals = []
+        for h in range(hops, 0, -1):
+            # layer-h vertices with σ_w and FINAL δ_w (missing δ = 0: a
+            # layer-h vertex with no deeper successors has zero dependency)
+            succ = layers[h].join(delta, ["id", "pv"], "left").select(
+                "id", "pv", "sigma", F.coalesce("delta", F.lit(0.0)).alias("delta")
             )
-            .join(layers[h - 1].select("id", "pv", "sigma"), ["id", "pv"])
-            .withColumn(
-                "_c",
-                F.col("sigma").cast("double")
-                / F.col("_sw").cast("double")
-                * (F.lit(1.0) + F.col("_dw")),
+            finals.append(succ.select("id", "pv", "delta"))
+            # shortest-path DAG edges: u at layer h-1 adjacent to w at layer h
+            delta = (
+                succ.join(e, succ["id"] == e["dst"])
+                .select(
+                    F.col("src").alias("id"),
+                    "pv",
+                    F.col("sigma").alias("_sw"),
+                    F.col("delta").alias("_dw"),
+                )
+                .join(layers[h - 1].select("id", "pv", "sigma"), ["id", "pv"])
+                .withColumn(
+                    "_c",
+                    F.col("sigma").cast("double")
+                    / F.col("_sw").cast("double")
+                    * (F.lit(1.0) + F.col("_dw")),
+                )
+                .groupBy("id", "pv")
+                .agg(F.sum("_c").alias("delta"))
+                .localCheckpoint(eager=False)
             )
-            .groupBy("id", "pv")
-            .agg(F.sum("_c").alias("delta"))
-            .localCheckpoint(eager=False)
-        )
-    # after the loop `delta` holds δ of layer 0 — the pivots themselves,
-    # which Brandes excludes, so it is dropped; a pivot appearing inside
-    # ANOTHER pivot's BFS is dropped by the id != pv filter instead
-    from functools import reduce
+        # after the loop `delta` holds δ of layer 0 — the pivots themselves,
+        # which Brandes excludes, so it is dropped; a pivot appearing inside
+        # ANOTHER pivot's BFS is dropped by the id != pv filter instead
+        from functools import reduce
 
-    per_pair = reduce(lambda a, b: a.unionByName(b), finals)
-    out = (
-        per_pair.filter(F.col("id") != F.col("pv"))
-        .groupBy("id")
-        .agg(F.round(F.sum("delta"), 6).alias("betweenness"))
-        .filter(F.col("betweenness") > 0.0)
-    )
-    try:
+        per_pair = reduce(lambda a, b: a.unionByName(b), finals)
+        out = (
+            per_pair.filter(F.col("id") != F.col("pv"))
+            .groupBy("id")
+            .agg(F.round(F.sum("delta"), 6).alias("betweenness"))
+            .filter(F.col("betweenness") > 0.0)
+        )
         return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.mis import mis_spec, mis_status
+from pregel_golang_implementation_spark.plans.pin import pinned
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
 
 
@@ -60,47 +61,46 @@ def greedy_coloring(
     if make_runner is None:
         make_runner = lambda spec: PregelRunner(spark, spec)  # noqa: E731
 
-    # probed by two semi-joins + the runner's edge prep EVERY color round
-    # — persist for the call; released after the colored result (≤ V
-    # rows) is materialized below (r6)
-    edges = edges.select(
-        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
-    ).persist()
-    vertices = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-
-    spec = mis_spec()
-    uncolored = vertices.localCheckpoint(eager=False)
-    assigned: list[DataFrame] = []
-    for c in range(colors):
-        residual = edges.join(
-            uncolored.select(F.col("id").alias("src")), "src", "left_semi"
-        ).join(uncolored.select(F.col("id").alias("dst")), "dst", "left_semi")
-        # vertices passed explicitly: an uncolored vertex whose neighbors
-        # are all colored is isolated in the residual graph, receives no
-        # message, and joins the set in inner round 1 (mis.py apply_fn's
-        # msg-NULL branch) — the SQL twin reproduces this with a LEFT JOIN.
-        res = make_runner(spec).run(
-            residual, vertices=uncolored, max_supersteps=inner_rounds
+    with pinned() as pins:
+        # probed by two semi-joins + the runner's edge prep EVERY color round (r6)
+        edges = pins(
+            edges.select(
+                F.col("src").cast("long").alias("src"),
+                F.col("dst").cast("long").alias("dst"),
+            )
         )
-        newly = (
-            mis_status(res.state)
-            .filter(F.col("status") == "in")
-            .select("id", F.lit(c).cast("long").alias("color"))
+        vertices = (
+            edges.select(F.col("src").alias("id"))
+            .unionByName(edges.select(F.col("dst").alias("id")))
+            .distinct()
         )
-        assigned.append(newly)
-        uncolored = uncolored.join(
-            newly.select("id"), "id", "left_anti"
-        ).localCheckpoint(eager=False)
 
-    out = assigned[0]
-    for frame in assigned[1:]:
-        out = out.unionByName(frame)
-    leftover = uncolored.select("id", F.lit(-1).cast("long").alias("color"))
-    try:
+        spec = mis_spec()
+        uncolored = vertices.localCheckpoint(eager=False)
+        assigned: list[DataFrame] = []
+        for c in range(colors):
+            residual = edges.join(
+                uncolored.select(F.col("id").alias("src")), "src", "left_semi"
+            ).join(uncolored.select(F.col("id").alias("dst")), "dst", "left_semi")
+            # vertices passed explicitly: an uncolored vertex whose neighbors
+            # are all colored is isolated in the residual graph, receives no
+            # message, and joins the set in inner round 1 (mis.py apply_fn's
+            # msg-NULL branch) — the SQL twin reproduces this with a LEFT JOIN.
+            res = make_runner(spec).run(
+                residual, vertices=uncolored, max_supersteps=inner_rounds
+            )
+            newly = (
+                mis_status(res.state)
+                .filter(F.col("status") == "in")
+                .select("id", F.lit(c).cast("long").alias("color"))
+            )
+            assigned.append(newly)
+            uncolored = uncolored.join(
+                newly.select("id"), "id", "left_anti"
+            ).localCheckpoint(eager=False)
+
+        out = assigned[0]
+        for frame in assigned[1:]:
+            out = out.unionByName(frame)
+        leftover = uncolored.select("id", F.lit(-1).cast("long").alias("color"))
         return out.unionByName(leftover).localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()

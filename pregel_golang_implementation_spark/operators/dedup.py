@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 # ------------------------------------------------------------ exact dedup
 
@@ -493,92 +495,67 @@ def near_dup_clusters(
     # two fewer shuffles; `sh` stays the verify side's set-semantics view
     bands = minhash_bands(reps, shingle_n=shingle_n, num_hashes=num_hashes,
                           rows_per_band=rows_per_band)
-    bands_cached = None
-    if max_bucket_size is not None:
-        # the occupancy probe below is an EAGER action over bands, and the
-        # pair join consumes bands again — without a cache the dominant
-        # shingle→minhash→bands lineage runs twice.  The bands frame is
-        # tiny relative to shingles (num_bands rows/doc, hashes only), so
-        # persist it across probe + pair join; released after the cluster
-        # runner has materialized the duplicate graph.  (This is NOT the
-        # shingle persist the docstring above rejects — shingles stay lazy,
-        # so verify still re-tokenizes candidate docs only.)
-        bands_cached = bands = bands.persist()
-    try:
-        return _near_dup_clusters_body(
-            d, bands, exact_edges, reps, sh, shingle_n, threshold,
-            max_supersteps, max_bucket_size, docs.sparkSession,
-        )
-    finally:
-        # released whether the probe / pair join / runner succeeded or
-        # raised — a failed resolve must not leak cached blocks for the
-        # session lifetime (same guard PregelRunner.run has for edges)
-        if bands_cached is not None:
-            bands_cached.unpersist()
-
-
-def _near_dup_clusters_body(
-    d: DataFrame,
-    bands: DataFrame,
-    exact_edges: DataFrame,
-    reps: DataFrame,
-    sh: DataFrame,
-    shingle_n: int,
-    threshold: float,
-    max_supersteps: int,
-    max_bucket_size: int | None,
-    spark,
-) -> DataFrame:
     from pregel_golang_implementation_spark.operators.connected_components import (
         cc_spec,
         symmetrize,
     )
     from pregel_golang_implementation_spark.plans.runner import PregelRunner
 
-    if max_bucket_size is not None:
-        # capped coverage must never be silent (module contract) — and on
-        # a HEALTHY corpus it must also be free.  The occupancy report
-        # runs as one eager scalar aggregate (≈ one bands pass); if NO
-        # bucket exceeds the cap — the common case once exact dups are
-        # collapsed — the pair join keeps the exact uncapped plan (the
-        # cap semi-join would change pairs' plan identity for all four of
-        # its downstream consumptions and measured +8s on a 5k-doc
-        # resolve even with the filter side cached/broadcast).  Only a
-        # corpus that actually HAS oversized buckets pays the semi-join,
-        # where it is precisely what prevents the k²/2 reducer blow-up.
-        import logging
+    with pinned() as pins:
+        if max_bucket_size is not None:
+            # the occupancy probe below is an EAGER action over bands, and
+            # the pair join consumes bands again — unpinned, the dominant
+            # shingle→minhash→bands lineage runs twice.  The bands frame is
+            # tiny relative to shingles (num_bands rows/doc, hashes only).
+            # (This is NOT the shingle persist the docstring above rejects
+            # — shingles stay lazy, so verify still re-tokenizes candidate
+            # docs only.)
+            bands = pins(bands)
+            # capped coverage must never be silent (module contract) — and
+            # on a HEALTHY corpus it must also be free.  The occupancy
+            # report runs as one eager scalar aggregate (≈ one bands pass);
+            # if NO bucket exceeds the cap — the common case once exact
+            # dups are collapsed — the pair join keeps the exact uncapped
+            # plan (the cap semi-join would change pairs' plan identity for
+            # all four of its downstream consumptions and measured +8s on a
+            # 5k-doc resolve even with the filter side cached/broadcast).
+            # Only a corpus that actually HAS oversized buckets pays the
+            # semi-join, where it is precisely what prevents the k²/2
+            # reducer blow-up.
+            import logging
 
-        row = (
-            oversized_buckets(bands, max_bucket_size)
-            .agg(
-                F.count(F.lit(1)).alias("n_buckets"),
-                F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+            row = (
+                oversized_buckets(bands, max_bucket_size)
+                .agg(
+                    F.count(F.lit(1)).alias("n_buckets"),
+                    F.coalesce(F.sum("n_docs"), F.lit(0)).alias("n_docs"),
+                )
+                .first()
             )
-            .first()
+            if row["n_buckets"]:
+                logging.getLogger(__name__).warning(
+                    "near_dup_clusters: %d LSH bucket(s) over max_bucket_size=%d "
+                    "(%d doc slots) were skipped — near-dups inside them are NOT "
+                    "paired; inspect with oversized_buckets(), or raise/lift the cap",
+                    row["n_buckets"], max_bucket_size, row["n_docs"],
+                )
+            else:
+                max_bucket_size = None  # nothing to cap: keep the uncapped plan
+        pairs = lsh_candidate_pairs(bands, max_bucket_size=max_bucket_size)
+        verified = ngram_jaccard(
+            reps, pairs=pairs, shingle_n=shingle_n, threshold=threshold, shingles=sh
         )
-        if row["n_buckets"]:
-            logging.getLogger(__name__).warning(
-                "near_dup_clusters: %d LSH bucket(s) over max_bucket_size=%d "
-                "(%d doc slots) were skipped — near-dups inside them are NOT "
-                "paired; inspect with oversized_buckets(), or raise/lift the cap",
-                row["n_buckets"], max_bucket_size, row["n_docs"],
-            )
-        else:
-            max_bucket_size = None  # nothing to cap: keep the uncapped plan
-    pairs = lsh_candidate_pairs(bands, max_bucket_size=max_bucket_size)
-    verified = ngram_jaccard(
-        reps, pairs=pairs, shingle_n=shingle_n, threshold=threshold, shingles=sh
-    )
-    near_edges = verified.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    dup_graph = symmetrize(exact_edges.unionByName(near_edges))
-    vertices = d.select(F.col("doc_id").alias("id"))
-    runner = PregelRunner(
-        spark, cc_spec(max_supersteps=max_supersteps), steps_per_action=2
-    )
-    # runner.run is eager (the BSP barrier actions) and localCheckpoints
-    # the result state, so by the time the caller's finally unpersists the
-    # bands cache nothing the caller holds still references it
-    res = runner.run(dup_graph, vertices=vertices)
+        near_edges = verified.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+        )
+        dup_graph = symmetrize(exact_edges.unionByName(near_edges))
+        vertices = d.select(F.col("doc_id").alias("id"))
+        runner = PregelRunner(
+            docs.sparkSession, cc_spec(max_supersteps=max_supersteps), steps_per_action=2
+        )
+        # runner.run is eager (the BSP barrier actions) and localCheckpoints
+        # the result state, so nothing it returns reads the bands pin
+        res = runner.run(dup_graph, vertices=vertices)
     return res.state.select(
         F.col("id").alias("doc_id"),
         F.col("value").cast("long").alias("cluster_id"),

@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 def hits(
     edges: DataFrame,
@@ -34,58 +36,54 @@ def hits(
     """(id, hub, authority) over the DIRECTED edge list after
     ``iterations`` rounds from the all-ones start; isolated-direction
     vertices (no in-edges / no out-edges) hold score 0 for that role."""
-    # e and v are probed twice per iteration — persist for the call (r6);
-    # per half-step the raw-score frame is pinned lazily so its two
-    # consumers (per-vertex scores + the normalization total) share one
-    # execution of the scatter join instead of running it twice
-    e = edges.select("src", "dst").persist()
-    v = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .persist()
-    )
-    state = v.select("id", F.lit(1.0).alias("h")).localCheckpoint(eager=True)
-    auth = None
-    for _ in range(iterations):
-        a_raw = (
-            e.join(state.select(F.col("id").alias("src"), "h"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("h").alias("s"))
-            .localCheckpoint(eager=False)
+    # e and v are probed twice per iteration (r6); per half-step the
+    # raw-score frame is pinned lazily so its two consumers (per-vertex
+    # scores + the normalization total) share one execution of the
+    # scatter join instead of running it twice
+    with pinned() as pins:
+        e = pins(edges.select("src", "dst"))
+        v = pins(
+            e.select(F.col("src").alias("id"))
+            .union(e.select(F.col("dst").alias("id")))
+            .distinct()
         )
-        a = (
-            v.join(a_raw, "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
-            .join(F.broadcast(a_raw.agg(F.sum("s").alias("t"))))
-            .select("id", (F.col("s") / F.col("t")).alias("a"))
-            .localCheckpoint(eager=True)
+        state = v.select("id", F.lit(1.0).alias("h")).localCheckpoint(eager=True)
+        auth = None
+        for _ in range(iterations):
+            a_raw = (
+                e.join(state.select(F.col("id").alias("src"), "h"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("h").alias("s"))
+                .localCheckpoint(eager=False)
+            )
+            a = (
+                v.join(a_raw, "id", "left")
+                .select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
+                .join(F.broadcast(a_raw.agg(F.sum("s").alias("t"))))
+                .select("id", (F.col("s") / F.col("t")).alias("a"))
+                .localCheckpoint(eager=True)
+            )
+            h_raw = (
+                e.join(a.select(F.col("id").alias("dst"), "a"), "dst")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("a").alias("s"))
+                .localCheckpoint(eager=False)
+            )
+            state = (
+                v.join(h_raw, "id", "left")
+                .select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
+                .join(F.broadcast(h_raw.agg(F.sum("s").alias("t"))))
+                .select("id", (F.col("s") / F.col("t")).alias("h"))
+                .localCheckpoint(eager=True)
+            )
+            auth = a
+        out = state.join(auth.withColumnRenamed("a", "authority"), "id").select(
+            "id", F.col("h").alias("hub"), "authority"
         )
-        h_raw = (
-            e.join(a.select(F.col("id").alias("dst"), "a"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("a").alias("s"))
-            .localCheckpoint(eager=False)
-        )
-        state = (
-            v.join(h_raw, "id", "left")
-            .select("id", F.coalesce("s", F.lit(0.0)).alias("s"))
-            .join(F.broadcast(h_raw.agg(F.sum("s").alias("t"))))
-            .select("id", (F.col("s") / F.col("t")).alias("h"))
-            .localCheckpoint(eager=True)
-        )
-        auth = a
-    out = state.join(auth.withColumnRenamed("a", "authority"), "id").select(
-        "id", F.col("h").alias("hub"), "authority"
-    )
-    if round_to is not None:
-        out = out.select(
-            "id",
-            F.round("hub", round_to).alias("hub"),
-            F.round("authority", round_to).alias("authority"),
-        )
-    try:
+        if round_to is not None:
+            out = out.select(
+                "id",
+                F.round("hub", round_to).alias("hub"),
+                F.round("authority", round_to).alias("authority"),
+            )
         return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-        v.unpersist()

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 def kcore_peel(
     edges: DataFrame,
@@ -52,11 +54,10 @@ def kcore_peel(
     if rounds < 1:
         raise ValueError(f"rounds must be ≥ 1, got {rounds}")
 
-    # the edge table is probed 2× per round (src/dst semi-joins); persist
-    # it for the call instead of re-running its lineage every round, and
-    # materialize the (≤ V rows) survivor set before releasing (r6)
-    edges = edges.persist()
-    try:
+    # the edge table is probed 2× per round (src/dst semi-joins); pin it
+    # instead of re-running its lineage every round (r6)
+    with pinned() as pins:
+        edges = pins(edges)
         deg = edges.groupBy(F.col("src").alias("id")).agg(
             F.count(F.lit(1)).alias("degree")
         )
@@ -73,5 +74,3 @@ def kcore_peel(
             )
             alive = deg.filter(F.col("degree") >= k)
         return alive.localCheckpoint(eager=True)
-    finally:
-        edges.unpersist()

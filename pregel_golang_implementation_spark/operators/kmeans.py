@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 def _assign(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Add ``cluster`` = argmin_k ROUND(‖x − c_k‖², 6), ties → smaller k.
@@ -64,10 +66,9 @@ def kmeans_assign(
     ``k`` smallest-id vectors, plus one final assignment against the last
     centroids.  Deterministic end to end (see module docstring)."""
     # each Lloyd iteration re-scans the embedding table (assignment +
-    # per-cluster means) — persist it for the call; released after the
-    # final (vec_id, cluster) assignment is materialized (r6)
-    emb = emb.select(F.col(id_col).cast("long").alias(id_col), "embedding").persist()
-    try:
+    # per-cluster means, r6)
+    with pinned() as pins:
+        emb = pins(emb.select(F.col(id_col).cast("long").alias(id_col), "embedding"))
         init = (
             emb.filter(F.col(id_col) < k)
             .orderBy(id_col)
@@ -110,5 +111,3 @@ def kmeans_assign(
         return _assign(emb, centroids).select(id_col, "cluster").localCheckpoint(
             eager=True
         )
-    finally:
-        emb.unpersist()

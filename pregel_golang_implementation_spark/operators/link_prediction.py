@@ -25,6 +25,8 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 log = logging.getLogger(__name__)
 
 
@@ -45,65 +47,62 @@ def adamic_adar_topk(
     smaller candidate id) and the returned score is the same rounded
     value — last-ulp drift can never flip the hash-compared rank.
     """
-    # e feeds the degree aggregate, the wedge build and the non-edge
-    # anti-join; e_mid self-joins; non_edges is mirrored twice — pin all
-    # three (no exchange reuse in this build, r6) and release e after the
-    # top-k result is materialized
-    e = und_edges.select("src", "dst").persist()
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-    if max_middle_degree is not None:
-        dropped = deg.filter(F.col("_d") > max_middle_degree).count()
-        if dropped:
-            log.warning(
-                "adamic_adar_topk: %d middle vertices above degree cap %d "
-                "excluded from wedge generation",
-                dropped,
-                max_middle_degree,
+    with pinned() as pins:
+        # e feeds the degree aggregate, the wedge build and the non-edge
+        # anti-join; e_mid self-joins; non_edges is mirrored twice — pin all
+        # three (no exchange reuse in this build, r6)
+        e = pins(und_edges.select("src", "dst"))
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
+        if max_middle_degree is not None:
+            dropped = deg.filter(F.col("_d") > max_middle_degree).count()
+            if dropped:
+                log.warning(
+                    "adamic_adar_topk: %d middle vertices above degree cap %d "
+                    "excluded from wedge generation",
+                    dropped,
+                    max_middle_degree,
+                )
+            mid_deg = deg.filter(F.col("_d") <= max_middle_degree)
+        else:
+            mid_deg = deg
+        # each eligible middle carries its Adamic–Adar weight into the wedge;
+        # degree-1 middles can't form a wedge anyway and would make ln(deg)=0
+        # a hard ANSI divide-by-zero in this projection, so cut them first
+        e_mid = (
+            e.join(mid_deg.filter(F.col("_d") >= 2), "src")
+            .withColumn("_w", F.lit(1.0) / F.log(F.col("_d").cast("double")))
+            .localCheckpoint(eager=False)
+        )
+        pairs = (
+            e_mid.alias("l")
+            .join(e_mid.alias("r"), F.col("l.src") == F.col("r.src"))
+            .filter(F.col("l.dst") < F.col("r.dst"))
+            .select(F.col("l.dst").alias("a"), F.col("r.dst").alias("b"), F.col("l._w"))
+        )
+        scored = pairs.groupBy("a", "b").agg(
+            F.round(F.sum("_w"), 6).alias("score")
+        )
+        non_edges = scored.join(
+            e.select(F.col("src").alias("a"), F.col("dst").alias("b")),
+            ["a", "b"],
+            "left_anti",
+        ).localCheckpoint(eager=False)
+        mirrored = non_edges.select(
+            F.col("a").alias("id"), F.col("b").alias("candidate"), "score"
+        ).unionByName(
+            non_edges.select(
+                F.col("b").alias("id"), F.col("a").alias("candidate"), "score"
             )
-        mid_deg = deg.filter(F.col("_d") <= max_middle_degree)
-    else:
-        mid_deg = deg
-    # each eligible middle carries its Adamic–Adar weight into the wedge;
-    # degree-1 middles can't form a wedge anyway and would make ln(deg)=0
-    # a hard ANSI divide-by-zero in this projection, so cut them first
-    e_mid = (
-        e.join(mid_deg.filter(F.col("_d") >= 2), "src")
-        .withColumn("_w", F.lit(1.0) / F.log(F.col("_d").cast("double")))
-        .localCheckpoint(eager=False)
-    )
-    pairs = (
-        e_mid.alias("l")
-        .join(e_mid.alias("r"), F.col("l.src") == F.col("r.src"))
-        .filter(F.col("l.dst") < F.col("r.dst"))
-        .select(F.col("l.dst").alias("a"), F.col("r.dst").alias("b"), F.col("l._w"))
-    )
-    scored = pairs.groupBy("a", "b").agg(
-        F.round(F.sum("_w"), 6).alias("score")
-    )
-    non_edges = scored.join(
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b")),
-        ["a", "b"],
-        "left_anti",
-    ).localCheckpoint(eager=False)
-    mirrored = non_edges.select(
-        F.col("a").alias("id"), F.col("b").alias("candidate"), "score"
-    ).unionByName(
-        non_edges.select(
-            F.col("b").alias("id"), F.col("a").alias("candidate"), "score"
         )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("candidate"))
-    out = (
-        mirrored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "id", "candidate", "score", F.col("rank").cast("long").alias("rank")
+        w = Window.partitionBy("id").orderBy(F.desc("score"), F.asc("candidate"))
+        out = (
+            mirrored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(
+                "id", "candidate", "score", F.col("rank").cast("long").alias("rank")
+            )
         )
-    )
-    try:
         return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
 
 
 def common_neighbor_topk(
@@ -115,56 +114,54 @@ def common_neighbor_topk(
     non-adjacent vertices sharing the most (cap-eligible) neighbors;
     deterministic ties → smallest candidate id.  ``und_edges`` must be
     symmetric (both directions present)."""
-    # same pin discipline as adamic_adar_topk (r6)
-    e = und_edges.select("src", "dst").persist()
-    if max_middle_degree is not None:
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
-        dropped = deg.filter(F.col("_d") > max_middle_degree).count()
-        if dropped:
-            log.warning(
-                "common_neighbor_topk: %d middle vertices above degree cap %d "
-                "excluded from wedge generation (stop-word cut — raise "
-                "max_middle_degree to include them)",
-                dropped,
-                max_middle_degree,
-            )
-        e_mid = e.join(
-            deg.filter(F.col("_d") <= max_middle_degree).select("src"), "src"
+    with pinned() as pins:
+        # same pin discipline as adamic_adar_topk (r6)
+        e = pins(und_edges.select("src", "dst"))
+        if max_middle_degree is not None:
+            deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("_d"))
+            dropped = deg.filter(F.col("_d") > max_middle_degree).count()
+            if dropped:
+                log.warning(
+                    "common_neighbor_topk: %d middle vertices above degree cap %d "
+                    "excluded from wedge generation (stop-word cut — raise "
+                    "max_middle_degree to include them)",
+                    dropped,
+                    max_middle_degree,
+                )
+            e_mid = e.join(
+                deg.filter(F.col("_d") <= max_middle_degree).select("src"), "src"
+            ).localCheckpoint(eager=False)
+        else:
+            e_mid = e
+        # wedges through each eligible middle m: (a — m — b), a < b
+        pairs = (
+            e_mid.alias("l")
+            .join(e_mid.alias("r"), F.col("l.src") == F.col("r.src"))
+            .filter(F.col("l.dst") < F.col("r.dst"))
+            .select(F.col("l.dst").alias("a"), F.col("r.dst").alias("b"))
+        )
+        common = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
+        # drop pairs that are already edges (a<b ordering matches one direction
+        # of the symmetric edge list)
+        non_edges = common.join(
+            e.select(F.col("src").alias("a"), F.col("dst").alias("b")),
+            ["a", "b"],
+            "left_anti",
         ).localCheckpoint(eager=False)
-    else:
-        e_mid = e
-    # wedges through each eligible middle m: (a — m — b), a < b
-    pairs = (
-        e_mid.alias("l")
-        .join(e_mid.alias("r"), F.col("l.src") == F.col("r.src"))
-        .filter(F.col("l.dst") < F.col("r.dst"))
-        .select(F.col("l.dst").alias("a"), F.col("r.dst").alias("b"))
-    )
-    common = pairs.groupBy("a", "b").agg(F.count(F.lit(1)).alias("common"))
-    # drop pairs that are already edges (a<b ordering matches one direction
-    # of the symmetric edge list)
-    non_edges = common.join(
-        e.select(F.col("src").alias("a"), F.col("dst").alias("b")),
-        ["a", "b"],
-        "left_anti",
-    ).localCheckpoint(eager=False)
-    # per-vertex view: each surviving pair scores both endpoints
-    mirrored = non_edges.select(
-        F.col("a").alias("id"), F.col("b").alias("candidate"), "common"
-    ).unionByName(
-        non_edges.select(
-            F.col("b").alias("id"), F.col("a").alias("candidate"), "common"
+        # per-vertex view: each surviving pair scores both endpoints
+        mirrored = non_edges.select(
+            F.col("a").alias("id"), F.col("b").alias("candidate"), "common"
+        ).unionByName(
+            non_edges.select(
+                F.col("b").alias("id"), F.col("a").alias("candidate"), "common"
+            )
         )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("common"), F.asc("candidate"))
-    out = (
-        mirrored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "id", "candidate", "common", F.col("rank").cast("long").alias("rank")
+        w = Window.partitionBy("id").orderBy(F.desc("common"), F.asc("candidate"))
+        out = (
+            mirrored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select(
+                "id", "candidate", "common", F.col("rank").cast("long").alias("rank")
+            )
         )
-    )
-    try:
         return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()

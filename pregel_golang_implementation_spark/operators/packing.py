@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 def pack_sequences(
     df: DataFrame,
@@ -47,17 +49,16 @@ def pack_sequences(
     are excluded.  Integer-exact and deterministic."""
     if capacity < 1:
         raise ValueError(f"capacity must be ≥ 1, got {capacity}")
-    keyed = (
-        df.select(
-            F.col(id_col).cast("long").alias("id"),
-            F.col(tokens_col).cast("long").alias("tokens"),
+    with pinned() as pins:
+        keyed = pins(
+            df.select(
+                F.col(id_col).cast("long").alias("id"),
+                F.col(tokens_col).cast("long").alias("tokens"),
+            )
+            .filter(F.col("tokens") > 0)
+            .withColumn("_h", F.md5(F.col("id").cast("string")))
+            .repartitionByRange(num_ranges, "_h", "id")
         )
-        .filter(F.col("tokens") > 0)
-        .withColumn("_h", F.md5(F.col("id").cast("string")))
-        .repartitionByRange(num_ranges, "_h", "id")
-    )
-    keyed.persist()
-    try:
         counts = {
             r["p"]: r["s"]
             for r in keyed.groupBy(F.spark_partition_id().alias("p"))
@@ -97,7 +98,4 @@ def pack_sequences(
                 "n_seqs", (F.col("last_seq") - F.col("first_seq") + 1).cast("long")
             )
         )
-        # materialize before unpersisting the range-partitioned input
         return out.localCheckpoint(eager=True)
-    finally:
-        keyed.unpersist()

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import Pins, pinned
 from pregel_golang_implementation_spark.plans.runner import PregelResult, PregelRunner
 from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec
 
@@ -137,8 +138,8 @@ def personalized_pagerank(
             "personalized_pagerank needs a non-empty source_ids — the "
             "teleport vector must sum to 1"
         )
-    pr_edges, vertices, caches = _build_pagerank_graph(edges, False, cache=True)
-    try:
+    with pinned() as pins:
+        pr_edges, vertices = _build_pagerank_graph(edges, False, pins)
         srcs = sorted({int(s) for s in source_ids})
         present = vertices.filter(F.col("id").isin(srcs)).count()
         if present != len(srcs):
@@ -156,23 +157,18 @@ def personalized_pagerank(
         spec.max_supersteps = max_supersteps
         runner = PregelRunner(spark, spec, **runner_kwargs)
         return runner.run(pr_edges, vertices=vertices)
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 def _build_pagerank_graph(
-    edges: DataFrame, weighted: bool, cache: bool
-) -> tuple[DataFrame, DataFrame, list[DataFrame]]:
-    """Shared builder for ``prepare_pagerank_graph``.  ``cache=True``
-    persists the deduped edge list and the vertex frame — the prep
+    edges: DataFrame, weighted: bool, pins: Pins | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """Shared builder for ``prepare_pagerank_graph``.  With ``pins``
+    the deduped edge list and the vertex frame are pinned — the prep
     lineage has THREE consumers (pr_edges, the caller's vertex count,
-    and the runner's state init), and uncached each one re-runs the
+    and the runner's state init), and unpinned each one re-runs the
     source scan + dedup shuffle (measured: 6.3s of a 16.7s warm sf0.1
-    PageRank was prep recomputation, r6 profile).  Returns the list of
-    persisted frames for the caller to unpersist after the runner has
-    materialized its own edge cache and init state."""
-    caches: list[DataFrame] = []
+    PageRank was prep recomputation, r6 profile)."""
+    pin = pins or (lambda df: df)
     # ONE exchange for the whole prep chain (guide §2.4 "two operations
     # keyed the same way can share one exchange"): hash(src) satisfies
     # the (src, dst) clustering the dedup/collapse aggregate needs, the
@@ -190,9 +186,7 @@ def _build_pagerank_graph(
             .groupBy("src", "dst")
             .agg(F.sum("_w").alias("_w"))
         )
-        if cache:
-            e = e.persist()
-            caches.append(e)
+        e = pin(e)
         pos = e.filter(F.col("_w") > 0)
         outdeg = pos.groupBy("src").agg(F.sum("_w").alias("_wsum"))
         pr_edges = pos.join(outdeg, "src").select(
@@ -204,24 +198,19 @@ def _build_pagerank_graph(
             .repartition("src")
             .dropDuplicates(["src", "dst"])
         )
-        if cache:
-            e = e.persist()
-            caches.append(e)
+        e = pin(e)
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
         pr_edges = e.join(outdeg, "src").select(
             "src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("weight")
         )
-    vertices = (
+    vertices = pin(
         e.select(F.col("src").alias("id"))
         .union(e.select(F.col("dst").alias("id")))
         .distinct()
         .join(outdeg.select(F.col("src").alias("id"), F.lit(True).alias("_has_out")), "id", "left")
         .select("id", F.col("_has_out").isNull().alias("is_dangling"))
     )
-    if cache:
-        vertices = vertices.persist()
-        caches.append(vertices)
-    return pr_edges, vertices, caches
+    return pr_edges, vertices
 
 
 def prepare_pagerank_graph(
@@ -245,8 +234,7 @@ def prepare_pagerank_graph(
     marked dangling (its mass redistributes), exactly like a vertex that
     never had out-edges; the vertex itself stays in the graph.
     """
-    pr_edges, vertices, _ = _build_pagerank_graph(edges, weighted, cache=False)
-    return pr_edges, vertices
+    return _build_pagerank_graph(edges, weighted)
 
 
 def pagerank(
@@ -264,18 +252,13 @@ def pagerank(
     instead of uniformly over out-edges.
     Result state: (id, value=rank, ...); ranks sum to 1 (±fp error).
     """
-    pr_edges, vertices, caches = _build_pagerank_graph(edges, weighted, cache=True)
-    try:
+    with pinned() as pins:
+        pr_edges, vertices = _build_pagerank_graph(edges, weighted, pins)
         n = vertices.count()
         spec = pagerank_spec(n, damping=damping, tol=tol)
         spec.max_supersteps = max_supersteps
         runner = PregelRunner(spark, spec, **runner_kwargs)
-        # run() materializes its own edge cache and init state, after which
-        # nothing the caller holds references the prep caches
         return runner.run(pr_edges, vertices=vertices)
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 def incremental_pagerank(
@@ -300,8 +283,8 @@ def incremental_pagerank(
     recurrence from that seed (what the oracle unrolls); running to
     convergence yields the standard PageRank.
     """
-    pr_edges, vertices, caches = _build_pagerank_graph(edges, False, cache=True)
-    try:
+    with pinned() as pins:
+        pr_edges, vertices = _build_pagerank_graph(edges, False, pins)
         n = vertices.count()
         seeded = vertices.join(
             prior_ranks.select("id", F.col("value").alias("_p")), "id", "left"
@@ -315,6 +298,3 @@ def incremental_pagerank(
             spark, pagerank_spec(n, damping=damping, tol=tol), **runner_kwargs
         )
         return runner.run(pr_edges, state=seeded, max_supersteps=max_supersteps)
-    finally:
-        for c in caches:
-            c.unpersist()

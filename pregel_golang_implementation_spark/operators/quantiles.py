@@ -39,6 +39,8 @@ from typing import Iterable
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 
 def exact_quantiles(
     df: DataFrame,
@@ -51,13 +53,12 @@ def exact_quantiles(
     ``df[col]`` (NULLs excluded), one row per q in ``qs``."""
     qs = list(qs)
     spark = df.sparkSession
-    vals = (
-        df.select(F.col(col).cast("double").alias("v"))
-        .where(F.col("v").isNotNull())
-        .repartitionByRange(num_ranges, "v")
-    )
-    vals.persist()
-    try:
+    with pinned() as pins:
+        vals = pins(
+            df.select(F.col(col).cast("double").alias("v"))
+            .where(F.col("v").isNotNull())
+            .repartitionByRange(num_ranges, "v")
+        )
         # one pass for the per-partition counts (P tiny rows to the driver)
         counts = {
             r["p"]: r["c"]
@@ -111,7 +112,4 @@ def exact_quantiles(
                 ).alias("value"),
             )
         )
-        # materialize before unpersisting the range-partitioned input
         return out.localCheckpoint(eager=True)
-    finally:
-        vals.unpersist()

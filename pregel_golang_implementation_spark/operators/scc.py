@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pregel_golang_implementation_spark.operators.connected_components import cc_spec
+from pregel_golang_implementation_spark.plans.pin import pinned
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
 
 
@@ -68,63 +69,62 @@ def scc_fwbw(
     nothing); ``trim_rounds``/``outer_rounds`` budget the peeling.  With
     ``strict`` a non-empty remainder raises ValueError instead of
     silently returning partial labels."""
-    # the directed edge projection is probed 2× per trim round, once per
-    # post-trim restriction and by both label runs — persist it for the
-    # call (released after the result is materialized below, r6)
-    e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long")).persist()
-    remaining = (
-        e.select(F.col("src").alias("id"))
-        .union(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    assigned: list[DataFrame] = []
-    for _ in range(outer_rounds):
-        for _t in range(trim_rounds):
-            remaining = remaining.localCheckpoint(eager=False)
-            er = e.join(
-                remaining.select(F.col("id").alias("src")), "src", "left_semi"
-            ).join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
-            has_in = er.select(F.col("dst").alias("id")).distinct()
-            has_out = er.select(F.col("src").alias("id")).distinct()
-            keep = remaining.join(has_in, "id", "left_semi").join(
-                has_out, "id", "left_semi"
-            )
-            assigned.append(
-                remaining.join(keep, "id", "left_anti").select(
-                    "id", F.col("id").alias("scc")
+    with pinned() as pins:
+        # the directed edge projection is probed 2× per trim round, once per
+        # post-trim restriction and by both label runs (r6)
+        e = pins(edges.select(F.col("src").cast("long"), F.col("dst").cast("long")))
+        remaining = (
+            e.select(F.col("src").alias("id"))
+            .union(e.select(F.col("dst").alias("id")))
+            .distinct()
+        )
+        assigned: list[DataFrame] = []
+        for _ in range(outer_rounds):
+            for _t in range(trim_rounds):
+                remaining = remaining.localCheckpoint(eager=False)
+                er = e.join(
+                    remaining.select(F.col("id").alias("src")), "src", "left_semi"
+                ).join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
+                has_in = er.select(F.col("dst").alias("id")).distinct()
+                has_out = er.select(F.col("src").alias("id")).distinct()
+                keep = remaining.join(has_in, "id", "left_semi").join(
+                    has_out, "id", "left_semi"
                 )
+                assigned.append(
+                    remaining.join(keep, "id", "left_anti").select(
+                        "id", F.col("id").alias("scc")
+                    )
+                )
+                remaining = keep
+            # post-trim every remaining vertex has in- AND out-edges inside the
+            # subgraph, so the restricted edge table's endpoints == remaining
+            # and the runner can derive its vertex set from the edges alone
+            er = (
+                e.join(remaining.select(F.col("id").alias("src")), "src", "left_semi")
+                .join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
+                .withColumn("weight", F.lit(1.0))
+                .localCheckpoint(eager=False)
             )
-            remaining = keep
-        # post-trim every remaining vertex has in- AND out-edges inside the
-        # subgraph, so the restricted edge table's endpoints == remaining
-        # and the runner can derive its vertex set from the edges alone
-        er = (
-            e.join(remaining.select(F.col("id").alias("src")), "src", "left_semi")
-            .join(remaining.select(F.col("id").alias("dst")), "dst", "left_semi")
-            .withColumn("weight", F.lit(1.0))
-            .localCheckpoint(eager=False)
-        )
-        spec = cc_spec(max_supersteps=inner_iters)
-        f = (
-            PregelRunner(spark, spec, **runner_kwargs)
-            .run(er, max_supersteps=inner_iters)
-            .state.select("id", F.col("value").cast("long").alias("_f"))
-        )
-        rev = er.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
-        )
-        b = (
-            PregelRunner(spark, spec, **runner_kwargs)
-            .run(rev, max_supersteps=inner_iters)
-            .state.select("id", F.col("value").cast("long").alias("_b"))
-        )
-        labeled = f.join(b, "id")
-        peel = labeled.filter(F.col("_f") == F.col("_b")).select(
-            "id", F.col("_f").alias("scc")
-        )
-        assigned.append(peel)
-        remaining = remaining.join(peel.select("id"), "id", "left_anti")
-    try:
+            spec = cc_spec(max_supersteps=inner_iters)
+            f = (
+                PregelRunner(spark, spec, **runner_kwargs)
+                .run(er, max_supersteps=inner_iters)
+                .state.select("id", F.col("value").cast("long").alias("_f"))
+            )
+            rev = er.select(
+                F.col("dst").alias("src"), F.col("src").alias("dst"), "weight"
+            )
+            b = (
+                PregelRunner(spark, spec, **runner_kwargs)
+                .run(rev, max_supersteps=inner_iters)
+                .state.select("id", F.col("value").cast("long").alias("_b"))
+            )
+            labeled = f.join(b, "id")
+            peel = labeled.filter(F.col("_f") == F.col("_b")).select(
+                "id", F.col("_f").alias("scc")
+            )
+            assigned.append(peel)
+            remaining = remaining.join(peel.select("id"), "id", "left_anti")
         if strict:
             leftover = remaining.count()
             if leftover:
@@ -132,8 +132,5 @@ def scc_fwbw(
                     f"scc_fwbw: {leftover} vertices unassigned after "
                     f"{outer_rounds} round(s) — raise outer_rounds/inner_iters"
                 )
-        # materialize (≤ V rows) before the edge cache is released
         out = reduce(lambda a, b: a.unionByName(b), assigned)
         return out.localCheckpoint(eager=True)
-    finally:
-        e.unpersist()

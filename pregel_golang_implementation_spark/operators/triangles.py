@@ -18,9 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import Pins, pinned
+
 
 def canonical_edges(
-    edges: DataFrame, degree_order: bool = True, _caches: list | None = None
+    edges: DataFrame, degree_order: bool = True, pins: Pins | None = None
 ) -> DataFrame:
     """Undirected edge set, one row per unordered pair, no self-loops.
 
@@ -28,15 +30,14 @@ def canonical_edges(
     endpoint to the higher one (total order, so still one row per pair) —
     use for skewed graphs at scale.
 
-    ``_caches`` (internal): when a list is passed, the deduped and
-    re-oriented edge tables are persisted and appended to it — the
-    oriented table is consumed THREE times by the wedge joins (e1, e2,
-    e3) and its dedup lineage twice more by the degree computation;
-    uncached, Catalyst expands each consumer into its own copy of the
+    With ``pins`` the deduped and re-oriented edge tables are pinned —
+    the oriented table is consumed THREE times by the wedge joins (e1,
+    e2, e3) and its dedup lineage twice more by the degree computation;
+    unpinned, Catalyst expands each consumer into its own copy of the
     whole upstream subtree (r6 plan audit of the bench copurchase graph:
-    91 Exchange / 30 source-scan nodes, zero reuse).  The caller owns
-    the unpersist."""
-    e = (
+    91 Exchange / 30 source-scan nodes, zero reuse)."""
+    pin = pins or (lambda df: df)
+    e = pin(
         edges.select(
             F.least(F.col("src"), F.col("dst")).cast("long").alias("src"),
             F.greatest(F.col("src"), F.col("dst")).cast("long").alias("dst"),
@@ -44,9 +45,6 @@ def canonical_edges(
         .filter(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
     )
-    if _caches is not None:
-        e = e.persist()
-        _caches.append(e)
     if not degree_order:
         return e
     deg = (
@@ -57,7 +55,7 @@ def canonical_edges(
     )
     ds = deg.select(F.col("id").alias("src"), F.col("deg").alias("_ds"))
     dd = deg.select(F.col("id").alias("dst"), F.col("deg").alias("_dd"))
-    ordered = (
+    return pin(
         e.join(ds, "src").join(dd, "dst")
         .select(
             F.when(
@@ -70,10 +68,6 @@ def canonical_edges(
         )
         .select(F.col("uv.u").alias("src"), F.col("uv.v").alias("dst"))
     )
-    if _caches is not None:
-        ordered = ordered.persist()
-        _caches.append(ordered)
-    return ordered
 
 
 def _wedges(e: DataFrame) -> DataFrame:
@@ -86,10 +80,10 @@ def _wedges(e: DataFrame) -> DataFrame:
 
 
 def _triangle_rows(
-    edges: DataFrame, degree_order: bool, _caches: list | None = None
+    edges: DataFrame, degree_order: bool, pins: Pins | None = None
 ) -> DataFrame:
     """(a, b, c) — one row per triangle under the chosen orientation."""
-    e = canonical_edges(edges, degree_order=degree_order, _caches=_caches)
+    e = canonical_edges(edges, degree_order=degree_order, pins=pins)
     wedges = _wedges(e)
     e3 = e.select(F.col("src").alias("a"), F.col("dst").alias("c"))
     return wedges.join(e3, ["a", "c"]).select("a", "b", "c")
@@ -99,12 +93,8 @@ def triangle_count(
     spark: SparkSession, edges: DataFrame, degree_order: bool = True
 ) -> int:
     """Global triangle count (exact — oracle: brute force over src<dst set)."""
-    caches: list[DataFrame] = []
-    try:
-        return _triangle_rows(edges, degree_order, _caches=caches).count()
-    finally:
-        for c in caches:
-            c.unpersist()
+    with pinned() as pins:
+        return _triangle_rows(edges, degree_order, pins).count()
 
 
 def triangles_per_vertex(
@@ -114,11 +104,10 @@ def triangles_per_vertex(
     Vertices in no triangle are absent (count 0 implied).
 
     Eager (r6): the result is materialized before the canonical-edge
-    caches are released — the per-vertex frame is |triangle vertices|
+    pins are released — the per-vertex frame is |triangle vertices|
     rows, far below the edge table it is derived from."""
-    caches: list[DataFrame] = []
-    try:
-        tri = _triangle_rows(edges, degree_order, _caches=caches)
+    with pinned() as pins:
+        tri = _triangle_rows(edges, degree_order, pins)
         corners = (
             tri.select(F.col("a").alias("id"))
             .union(tri.select(F.col("b").alias("id")))
@@ -126,6 +115,3 @@ def triangles_per_vertex(
         )
         out = corners.groupBy("id").agg(F.count(F.lit(1)).alias("triangles"))
         return out.localCheckpoint(eager=True)
-    finally:
-        for c in caches:
-            c.unpersist()

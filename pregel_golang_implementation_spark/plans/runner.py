@@ -36,6 +36,7 @@ from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from pregel_golang_implementation_spark.plans.pin import Pins, pinned
 from pregel_golang_implementation_spark.plans.spec import AlgorithmSpec, combine_messages
 
 STATE_SCHEMA_DOC = "state(id: long, value: double, active: boolean, *static)"
@@ -169,7 +170,6 @@ class PregelRunner:
         self.salt_degree_threshold = salt_degree_threshold
         self.num_salts = num_salts
         self._salting = bool(salt_degree_threshold)
-        self._edges_cached: DataFrame | None = None
         # chain K supersteps into ONE job (each still reports exact
         # metrics via its own Observation): the superstep barrier only
         # needs an ACTION when the driver must read something between
@@ -231,7 +231,7 @@ class PregelRunner:
     EDGES_PER_PARTITION = 75_000  # adaptive floor: ≥75k edge rows per task
     MIN_PARTITIONS = 8
 
-    def _prepare_edges(self, edges: DataFrame) -> DataFrame:
+    def _prepare_edges(self, edges: DataFrame, pins: Pins) -> DataFrame:
         cols = [F.col("src").cast("long"), F.col("dst").cast("long")]
         if "weight" in edges.columns:
             cols.append(F.col("weight").cast("double"))
@@ -267,33 +267,23 @@ class PregelRunner:
         # One per-partition sort, once per run, amortized over every
         # superstep; the per-step joins are hash-based and don't need it.
         order = e.columns  # total order over every column ⇒ ties can't reorder
+        staging = None
         if self.num_partitions is None:
             # size the layout to the data (scale-adaptive note in
-            # __init__) WITHOUT running the edge lineage twice: cache the
+            # __init__) WITHOUT running the edge lineage twice: pin the
             # un-laid-out edges, count them to pick the partition count,
-            # then shuffle FROM the cache into the final layout and drop
-            # the staging cache — the lineage executes exactly once.
-            e0 = e.persist()
-            n_edges = e0.count()
+            # then shuffle FROM the pin into the final layout and release
+            # the staging pin — the lineage executes exactly once.
+            staging = e = pins(e)
+            n_edges = e.count()
             self.num_partitions = min(
                 self._conf_partitions,
                 max(self.MIN_PARTITIONS, math.ceil(n_edges / self.EDGES_PER_PARTITION)),
             )
-            e = (
-                e0.repartition(self.num_partitions, "src")
-                .sortWithinPartitions(*order)
-                .persist()
-            )
-            e.count()
-            e0.unpersist()
-        else:
-            e = (
-                e.repartition(self.num_partitions, "src")
-                .sortWithinPartitions(*order)
-                .persist()
-            )
-            e.count()  # materialize once; every superstep reuses this layout
-        self._edges_cached = e  # tracked so run() can unpersist (no leak)
+        e = pins(e.repartition(self.num_partitions, "src").sortWithinPartitions(*order))
+        e.count()  # materialize once; every superstep reuses this layout
+        if staging is not None:
+            pins.release(staging)
         return e
 
     @staticmethod
@@ -304,7 +294,7 @@ class PregelRunner:
             .distinct()
         )
 
-    def _init_state(self, vertices: DataFrame) -> DataFrame:
+    def _init_state(self, vertices: DataFrame, pins: Pins) -> DataFrame:
         state = self.spec.init_fn(vertices)
         if "active" not in state.columns:
             state = state.withColumn("active", F.lit(True))
@@ -315,14 +305,14 @@ class PregelRunner:
             F.col("active").cast("boolean"),
             *[F.col(c) for c in self.spec.static_cols],
         ).select(*cols)
-        # persist, NOT eager localCheckpoint (r6): a checkpoint erases the
+        # pinned, NOT eager localCheckpoint (r6): a checkpoint erases the
         # hash(id) partitioning metadata, so superstep 1's state⋈messages
-        # joins re-shuffled the state it had JUST laid out — the persist
+        # joins re-shuffled the state it had JUST laid out — the pin
         # keeps the partitioning visible exactly like every later
-        # superstep's state cache.  Materialization rides the next action
+        # superstep's state pin.  Materialization rides the next action
         # (collect_globals or the first block's barrier); the loop
         # releases it as the zeroth `prev_cached`.
-        return state.repartition(self.num_partitions, "id").persist()
+        return pins(state.repartition(self.num_partitions, "id"))
 
     def _collect_globals(self, state: DataFrame) -> dict:
         if not self.spec.global_aggs:
@@ -463,203 +453,185 @@ class PregelRunner:
             vertices = self.vertices_from_edges(
                 edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
             )
-        edges = self._prepare_edges(edges)
-        if state is None and vertices is None:
-            # unsalted: derive vertices from the PREPARED (cached,
-            # partitioned) edge table instead of the raw input — the
-            # distinct reads the edge cache rather than re-running the
-            # source scan lineage a second time (r6)
-            vertices = self.vertices_from_edges(edges)
-        try:
-            return self._run_loop(
-                edges, vertices, state, start_superstep, max_steps
-            )
-        finally:
-            # a long-lived session runs many jobs through many runners —
-            # leaked edge caches accumulate dead blocks and evict useful
-            # ones. The result state is localCheckpointed before return, so
-            # it never depends on these blocks.
-            edges.unpersist()
-            self._edges_cached = None
+        # every frame the loop pins — the edge layout, the init state,
+        # each block's state — is released when run() returns or raises;
+        # the result state is localCheckpointed first, so it never
+        # depends on these blocks
+        with pinned() as pins:
+            edges = self._prepare_edges(edges, pins)
+            if state is None and vertices is None:
+                # unsalted: derive vertices from the PREPARED (pinned,
+                # partitioned) edge table instead of the raw input — the
+                # distinct reads the edge pin rather than re-running the
+                # source scan lineage a second time (r6)
+                vertices = self.vertices_from_edges(edges)
+            prev_cached = None  # the previous block's pinned new_state
+            if state is None:
+                # the init pin is the zeroth block pin: released after the
+                # first block materializes, like every later new_state
+                state = prev_cached = self._init_state(vertices, pins)
+            g = self._collect_globals(state)
+            prev_active = -1  # unknown → don't broadcast on step 1
 
-    def _run_loop(
-        self,
-        edges: DataFrame,
-        vertices: DataFrame | None,
-        state: DataFrame | None,
-        start_superstep: int,
-        max_steps: int,
-    ) -> PregelResult:
-        spec = self.spec
-        prev_cached = None  # the previous superstep's persisted new_state
-        if state is None:
-            state = self._init_state(vertices)
-            # the init persist is the zeroth block cache: released after
-            # the first block materializes, like every later new_state
-            prev_cached = state
-        g = self._collect_globals(state)
-        prev_active = -1  # unknown → don't broadcast on step 1
-
-        metrics: list[SuperstepMetrics] = []
-        step = start_superstep
-        converged = False
-        last_ckpt_step = None
-        # persist keeps the hash(id) output partitioning visible to the
-        # planner (localCheckpoint would erase it and force a re-shuffle
-        # of state on every join). Metrics + global aggregates ride on
-        # the SAME materializing action via the Observation API — one
-        # job per block of supersteps, no second pass over state (the
-        # reference needs a whole master round-trip for this,
-        # Master.go:958-967).
-        agg_cols = [
-            F.sum(F.col("active").cast("long")).alias("_active"),
-            F.sum("_nmsg").alias("_msgs"),
-            F.max("_delta").alias("_maxdelta"),
-            F.count(F.lit(1)).alias("_n"),
-        ] + [c.alias(k) for k, c in spec.global_aggs.items()]
-        while step - start_superstep < max_steps:
-            k_steps = min(
-                self.steps_per_action, max_steps - (step - start_superstep)
-            )
-            t0 = time.monotonic()
-            observations: list[Observation] = []
-            msg_observations: list[Observation | None] = []
-            cur = state
-            for j in range(k_steps):
-                obs = Observation(f"superstep_{step + j + 1}")
-                mobs = (
-                    Observation(f"msgs_{step + j + 1}")
-                    if self.slim_shuffle
-                    else None
+            metrics: list[SuperstepMetrics] = []
+            step = start_superstep
+            converged = False
+            last_ckpt_step = None
+            # the pin keeps the hash(id) output partitioning visible to the
+            # planner (localCheckpoint would erase it and force a re-shuffle
+            # of state on every join). Metrics + global aggregates ride on
+            # the SAME materializing action via the Observation API — one
+            # job per block of supersteps, no second pass over state (the
+            # reference needs a whole master round-trip for this,
+            # Master.go:958-967).
+            agg_cols = [
+                F.sum(F.col("active").cast("long")).alias("_active"),
+                F.sum("_nmsg").alias("_msgs"),
+                F.max("_delta").alias("_maxdelta"),
+                F.count(F.lit(1)).alias("_n"),
+            ] + [c.alias(k) for k, c in spec.global_aggs.items()]
+            while step - start_superstep < max_steps:
+                k_steps = min(
+                    self.steps_per_action, max_steps - (step - start_superstep)
                 )
-                msg_observations.append(mobs)
-                # step 1 of the block: exact globals off the previous
-                # block's Observation as driver literals (fast path);
-                # steps 2..K: globals in-plan from the incoming frame
-                full = self._one_superstep(
-                    cur,
-                    edges,
-                    g,
-                    prev_active if j == 0 else -1,
-                    inplan_globals=(j > 0),
-                    msg_obs=mobs,
-                )
-                if j < k_steps - 1:
-                    # LAZY localCheckpoint: pins the intermediate step to
-                    # ONE physical RDD, so its chained consumers (next
-                    # scatter, next apply probe, in-plan globals agg, the
-                    # per-step observe) share a single execution of this
-                    # step's apply join via stage-level dedup — still zero
-                    # actions, one job per block.  Without it each consumer
-                    # re-executed the join (exchanges were reused, joins
-                    # were not): measured 1.8× block cost on 8M vertices /
-                    # 156M edges at local[16].  A .repartition dedup point
-                    # gets optimizer-removed as redundant (state is already
-                    # id-partitioned); the lazy checkpoint preserves that
-                    # partitioning, so no extra exchange appears.  The
-                    # checkpoint must sit BELOW the observe: a CollectMetrics
-                    # captured inside the checkpointed RDD belongs to an
-                    # inner query execution whose metrics never reach this
-                    # block's action (observed: zeros → false convergence).
-                    full = full.localCheckpoint(eager=False)
-                full = full.observe(obs, *agg_cols)
-                observations.append(obs)
-                cur = full.select("id", *spec.static_cols, "value", "active")
-            new_state = cur.persist()
-            new_state.count()  # the BSP barrier action (one per block)
-            block_wall = time.monotonic() - t0
-            rows = [o.get for o in observations]
-            g = {k: rows[-1][k] for k in spec.global_aggs}
+                t0 = time.monotonic()
+                observations: list[Observation] = []
+                msg_observations: list[Observation | None] = []
+                cur = state
+                for j in range(k_steps):
+                    obs = Observation(f"superstep_{step + j + 1}")
+                    mobs = (
+                        Observation(f"msgs_{step + j + 1}")
+                        if self.slim_shuffle
+                        else None
+                    )
+                    msg_observations.append(mobs)
+                    # step 1 of the block: exact globals off the previous
+                    # block's Observation as driver literals (fast path);
+                    # steps 2..K: globals in-plan from the incoming frame
+                    full = self._one_superstep(
+                        cur,
+                        edges,
+                        g,
+                        prev_active if j == 0 else -1,
+                        inplan_globals=(j > 0),
+                        msg_obs=mobs,
+                    )
+                    if j < k_steps - 1:
+                        # LAZY localCheckpoint: pins the intermediate step to
+                        # ONE physical RDD, so its chained consumers (next
+                        # scatter, next apply probe, in-plan globals agg, the
+                        # per-step observe) share a single execution of this
+                        # step's apply join via stage-level dedup — still zero
+                        # actions, one job per block.  Without it each consumer
+                        # re-executed the join (exchanges were reused, joins
+                        # were not): measured 1.8× block cost on 8M vertices /
+                        # 156M edges at local[16].  A .repartition dedup point
+                        # gets optimizer-removed as redundant (state is already
+                        # id-partitioned); the lazy checkpoint preserves that
+                        # partitioning, so no extra exchange appears.  The
+                        # checkpoint must sit BELOW the observe: a CollectMetrics
+                        # captured inside the checkpointed RDD belongs to an
+                        # inner query execution whose metrics never reach this
+                        # block's action (observed: zeros → false convergence).
+                        full = full.localCheckpoint(eager=False)
+                    full = full.observe(obs, *agg_cols)
+                    observations.append(obs)
+                    cur = full.select("id", *spec.static_cols, "value", "active")
+                new_state = pins(cur)
+                new_state.count()  # the BSP barrier action (one per block)
+                block_wall = time.monotonic() - t0
+                rows = [o.get for o in observations]
+                g = {k: rows[-1][k] for k in spec.global_aggs}
 
-            if prev_cached is not None:
-                prev_cached.unpersist()  # previous block's blocks — now dead
-            prev_cached = new_state
-            state = new_state
-            step += k_steps
-            if self.lineage_break_every and step % self.lineage_break_every < k_steps:
-                # lineage break: every superstep references the previous
-                # state TWICE (frontier join + apply join), so the analyzed
-                # plan tree DOUBLES per step — Catalyst analysis cost grows
-                # exponentially past ~6 unbroken steps even though caches
-                # stop recomputation. Truncate every few steps; the eager
-                # localCheckpoint copies from the still-persisted blocks
-                # (cheap) at the cost of re-shuffling state once on the next
-                # join (its partitioning metadata is erased). Measured
-                # optimum ≈ every 2 steps (SURVEY.md §4 P10).
-                state = state.localCheckpoint(eager=True)
-                prev_cached.unpersist()
-                prev_cached = None
+                if prev_cached is not None:
+                    pins.release(prev_cached)  # previous block's pin — now dead
+                prev_cached = new_state
+                state = new_state
+                step += k_steps
+                if self.lineage_break_every and step % self.lineage_break_every < k_steps:
+                    # lineage break: every superstep references the previous
+                    # state TWICE (frontier join + apply join), so the analyzed
+                    # plan tree DOUBLES per step — Catalyst analysis cost grows
+                    # exponentially past ~6 unbroken steps even though caches
+                    # stop recomputation. Truncate every few steps; the eager
+                    # localCheckpoint copies from the still-pinned blocks
+                    # (cheap) at the cost of re-shuffling state once on the next
+                    # join (its partitioning metadata is erased). Measured
+                    # optimum ≈ every 2 steps (SURVEY.md §4 P10).
+                    state = state.localCheckpoint(eager=True)
+                    pins.release(prev_cached)
+                    prev_cached = None
 
-            for j, row in enumerate(rows):
-                if msg_observations[j] is not None:
-                    # slim mode: the exact count off the pre-shuffle
-                    # Observation (the combine shipped no counts)
-                    try:
-                        msgs_sent = int(
-                            msg_observations[j].get["_msgs_sent"] or 0
-                        )
-                    except Py4JJavaError as exc:
-                        # AQE empty-relation propagation: when the message
-                        # frame is provably empty (e.g. the final frontier
-                        # has no out-edges), the apply join's right subtree
-                        # is folded away in the FINAL plan and its
-                        # CollectMetrics never reaches observedMetrics —
-                        # getRow then hands back a schema-less row whose
-                        # toPyRow conversion fails its arity assert.
-                        # Pruning fires only for empty subtrees, and
-                        # combined is empty iff msgs is empty, so the true
-                        # count is exactly 0.  ONLY that signature is
-                        # swallowed (ADVICE r5): any other metrics-
-                        # retrieval failure is a real error, not a real
-                        # zero-message superstep — re-raise it.
-                        if "toPyRow" not in str(exc):
-                            raise
-                        msgs_sent = 0
-                else:
-                    msgs_sent = int(row["_msgs"] or 0)
-                m = SuperstepMetrics(
-                    superstep=step - k_steps + j + 1,
-                    active_vertices=int(row["_active"] or 0),
-                    messages_sent=msgs_sent,
-                    max_delta=float(row["_maxdelta"] or 0.0),
-                    num_vertices=int(row["_n"]),
-                    wall_secs=block_wall / k_steps,
-                    # each step's OWN observation row — not the block-final
-                    # globals — so chained metrics equal unchained exactly
-                    globals={k: row[k] for k in spec.global_aggs},
-                )
-                metrics.append(m)
-                if m.active_vertices == 0:
-                    # chained steps past the fixed point were no-ops (empty
-                    # frontier → no messages → identical state): report the
-                    # true convergence step and drop the no-op tail
-                    converged = True
-                    step = m.superstep
+                for j, row in enumerate(rows):
+                    if msg_observations[j] is not None:
+                        # slim mode: the exact count off the pre-shuffle
+                        # Observation (the combine shipped no counts)
+                        try:
+                            msgs_sent = int(
+                                msg_observations[j].get["_msgs_sent"] or 0
+                            )
+                        except Py4JJavaError as exc:
+                            # AQE empty-relation propagation: when the message
+                            # frame is provably empty (e.g. the final frontier
+                            # has no out-edges), the apply join's right subtree
+                            # is folded away in the FINAL plan and its
+                            # CollectMetrics never reaches observedMetrics —
+                            # getRow then hands back a schema-less row whose
+                            # toPyRow conversion fails its arity assert.
+                            # Pruning fires only for empty subtrees, and
+                            # combined is empty iff msgs is empty, so the true
+                            # count is exactly 0.  ONLY that signature is
+                            # swallowed (ADVICE r5): any other metrics-
+                            # retrieval failure is a real error, not a real
+                            # zero-message superstep — re-raise it.
+                            if "toPyRow" not in str(exc):
+                                raise
+                            msgs_sent = 0
+                    else:
+                        msgs_sent = int(row["_msgs"] or 0)
+                    m = SuperstepMetrics(
+                        superstep=step - k_steps + j + 1,
+                        active_vertices=int(row["_active"] or 0),
+                        messages_sent=msgs_sent,
+                        max_delta=float(row["_maxdelta"] or 0.0),
+                        num_vertices=int(row["_n"]),
+                        wall_secs=block_wall / k_steps,
+                        # each step's OWN observation row — not the block-final
+                        # globals — so chained metrics equal unchained exactly
+                        globals={k: row[k] for k in spec.global_aggs},
+                    )
+                    metrics.append(m)
+                    if m.active_vertices == 0:
+                        # chained steps past the fixed point were no-ops (empty
+                        # frontier → no messages → identical state): report the
+                        # true convergence step and drop the no-op tail
+                        converged = True
+                        step = m.superstep
+                        break
+                prev_active = metrics[-1].active_vertices
+
+                if self.checkpoint_dir and self.checkpoint_every and (
+                    step % self.checkpoint_every < k_steps
+                ):
+                    self._write_checkpoint(state, step, metrics)
+                    last_ckpt_step = step
+
+                if converged:
                     break
-            prev_active = metrics[-1].active_vertices
 
-            if self.checkpoint_dir and self.checkpoint_every and (
-                step % self.checkpoint_every < k_steps
-            ):
+            if self.checkpoint_dir and last_ckpt_step != step:
                 self._write_checkpoint(state, step, metrics)
-                last_ckpt_step = step
-
-            if converged:
-                break
-
-        if self.checkpoint_dir and last_ckpt_step != step:
-            self._write_checkpoint(state, step, metrics)
-        if prev_cached is not None:
-            # detach the result from the loop's cached blocks (and from the
-            # edge cache, unpersisted by run()'s finally): the eager copy is
-            # one pass over the final state, after which nothing the caller
-            # holds references runner-internal storage.
-            state = state.localCheckpoint(eager=True)
-            prev_cached.unpersist()
-        return PregelResult(
-            state=state, supersteps=step - start_superstep, converged=converged,
-            metrics=metrics,
-        )
+            if prev_cached is not None:
+                # detach the result from the loop's pins (released as the
+                # scope exits): the eager copy is one pass over the final
+                # state, after which nothing the caller holds references
+                # runner-internal storage.
+                state = state.localCheckpoint(eager=True)
+            return PregelResult(
+                state=state, supersteps=step - start_superstep, converged=converged,
+                metrics=metrics,
+            )
 
     # ----------------------------------------------------------- checkpoint
 

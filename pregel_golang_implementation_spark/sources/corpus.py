@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pregel_golang_implementation_spark.plans.pin import pinned
+
 CORPUS_SCHEMA = T.StructType(
     [
         T.StructField("repo", T.StringType(), False),
@@ -181,39 +183,36 @@ def assign_vertex_ids(corpus: DataFrame, num_partitions: int | None = None) -> D
     sampled range boundaries fall, so ids are deterministic (ids start at
     1, matching the previous row_number implementation).
 
-    The keyed frame is persisted between the two passes (re-sampling range
+    The keyed frame is pinned between the two passes (re-sampling range
     boundaries on recompute could silently shift rows between partitions,
-    desynchronizing counts from assignment), and the result is eagerly
-    materialized so the intermediate cache can be released before return.
+    desynchronizing counts from assignment).
     """
     spark = corpus.sparkSession
     n_parts = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    keyed = (
-        corpus.select("repo", "path")
-        .distinct()
-        .repartitionByRange(n_parts, "repo", "path")
-        .sortWithinPartitions("repo", "path")
-        .withColumn("_pid", F.spark_partition_id())
-        .persist()
-    )
-    counts = {
-        int(r["_pid"]): int(r["n"])
-        for r in keyed.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    offsets, acc = [], 0
-    for pid in range(max(counts, default=-1) + 1):
-        offsets.append((pid, acc))
-        acc += counts.get(pid, 0)
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
-    w = Window.partitionBy("_pid").orderBy("repo", "path")
-    ids = (
-        keyed.join(F.broadcast(off_df), "_pid")
-        .withColumn("id", (F.row_number().over(w) + F.col("_off")).cast("long"))
-        .select("repo", "path", "id")
-        .localCheckpoint(eager=True)
-    )
-    keyed.unpersist()
-    return ids
+    with pinned() as pins:
+        keyed = pins(
+            corpus.select("repo", "path")
+            .distinct()
+            .repartitionByRange(n_parts, "repo", "path")
+            .sortWithinPartitions("repo", "path")
+            .withColumn("_pid", F.spark_partition_id())
+        )
+        counts = {
+            int(r["_pid"]): int(r["n"])
+            for r in keyed.groupBy("_pid").agg(F.count(F.lit(1)).alias("n")).collect()
+        }
+        offsets, acc = [], 0
+        for pid in range(max(counts, default=-1) + 1):
+            offsets.append((pid, acc))
+            acc += counts.get(pid, 0)
+        off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid int, _off long")
+        w = Window.partitionBy("_pid").orderBy("repo", "path")
+        return (
+            keyed.join(F.broadcast(off_df), "_pid")
+            .withColumn("id", (F.row_number().over(w) + F.col("_off")).cast("long"))
+            .select("repo", "path", "id")
+            .localCheckpoint(eager=True)
+        )
 
 
 def corpus_edge_table(corpus: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -191,6 +191,7 @@ def test_edge_layout_order_is_deterministic(spark):
         pagerank_spec,
         prepare_pagerank_graph,
     )
+    from pregel_golang_implementation_spark.plans.pin import pinned
     from pregel_golang_implementation_spark.plans.runner import PregelRunner
     from pregel_golang_implementation_spark.sources.graphs import synthetic_edges
 
@@ -200,14 +201,13 @@ def test_edge_layout_order_is_deterministic(spark):
 
     def layout():
         runner = PregelRunner(spark, pagerank_spec(n))
-        e = runner._prepare_edges(pr_edges)
-        rows = [
-            tuple(r)
-            for r in e.withColumn("p", F.spark_partition_id())
-            .select("p", "src", "dst", "weight")
-            .collect()
-        ]
-        e.unpersist()
-        return rows
+        with pinned() as pins:
+            e = runner._prepare_edges(pr_edges, pins)
+            return [
+                tuple(r)
+                for r in e.withColumn("p", F.spark_partition_id())
+                .select("p", "src", "dst", "weight")
+                .collect()
+            ]
 
     assert layout() == layout()  # exact order, not just multiset

@@ -54,8 +54,8 @@ def test_runner_releases_edge_cache(spark):
     captured = {}
     orig = runner._prepare_edges
 
-    def capture(e):
-        df = orig(e)
+    def capture(e, pins):
+        df = orig(e, pins)
         captured["edges"] = df
         return df
 
@@ -63,7 +63,6 @@ def test_runner_releases_edge_cache(spark):
     res = runner.run(edges)
     lvl = captured["edges"].storageLevel
     assert not (lvl.useMemory or lvl.useDisk), "edge cache leaked after run()"
-    assert runner._edges_cached is None
     # result is detached from runner-internal storage: still collectable
     assert res.state.count() == 11
 

@@ -91,6 +91,9 @@ def main() -> None:
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     edges = edges_from_lineitem(spark, SF)
+    from pregel_golang_implementation_spark.plans.pin import Pins
+
+    pins = Pins()  # every internal pin lives as long as the session
 
     # ---- pagerank: prep chain + one superstep
     from pregel_golang_implementation_spark.operators.pagerank import (
@@ -104,8 +107,8 @@ def main() -> None:
     dump("pagerank_prep_vertices", vertices)
     n = vertices.count()
     runner = PregelRunner(spark, pagerank_spec(n))
-    e = runner._prepare_edges(pr_edges)
-    state = runner._init_state(vertices)
+    e = runner._prepare_edges(pr_edges, pins)
+    state = runner._init_state(vertices, pins)
     state.count()  # materialize exactly as the runner's first action does
     step = runner._one_superstep(state, e, {"dangling_mass": 0.0}, -1)
     dump("pagerank_superstep", step)
@@ -118,9 +121,9 @@ def main() -> None:
 
     und = symmetrize(edges, dedup=False)
     cc_runner = PregelRunner(spark, cc_spec())
-    ecc = cc_runner._prepare_edges(und)
+    ecc = cc_runner._prepare_edges(und, pins)
     ccv = cc_runner.vertices_from_edges(ecc)
-    cc_state = cc_runner._init_state(ccv)
+    cc_state = cc_runner._init_state(ccv, pins)
     cc_state.count()
     cc_step = cc_runner._one_superstep(cc_state, ecc, {}, -1)
     dump("cc_superstep", cc_step)
@@ -149,14 +152,7 @@ def main() -> None:
     # ---- triangles
     from pregel_golang_implementation_spark.operators import triangles as TR
 
-    caches: list = []
-    try:
-        tri = TR._triangle_rows(edges, True, _caches=caches)
-    except TypeError:  # round-start signature
-        tri = TR._triangle_rows(edges, True)
-    dump("triangle_rows", tri)
-    for c in caches:
-        c.unpersist()
+    dump("triangle_rows", TR._triangle_rows(edges, True, pins))
 
     # ---- similarity
     from pregel_golang_implementation_spark.operators import similarity as S
@@ -194,6 +190,7 @@ def main() -> None:
     events = spark.read.parquet(f"{SF}/events.parquet")
     dump("event_funnel", funnel(events))
 
+    pins.release_all()
     spark.stop()
 
 

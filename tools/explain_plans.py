@@ -23,6 +23,7 @@ from pregel_golang_implementation_spark.operators.pagerank import (
     pagerank_spec,
     prepare_pagerank_graph,
 )
+from pregel_golang_implementation_spark.plans.pin import Pins
 from pregel_golang_implementation_spark.plans.runner import PregelRunner
 from pregel_golang_implementation_spark.session import get_spark
 from pregel_golang_implementation_spark.sources.graphs import edges_from_lineitem
@@ -38,6 +39,7 @@ def grab(df) -> str:
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark(app_name="plans", cores=8, shuffle_partitions=8)
+    pins = Pins()  # every runner-internal pin lives as long as the session
     sections: list[tuple[str, str]] = []
 
     # 1. pruned/pushed parquet scan feeding the edge table
@@ -50,8 +52,8 @@ def main() -> None:
     pr_edges, vertices = prepare_pagerank_graph(edges)
     n = vertices.count()
     runner = PregelRunner(spark, pagerank_spec(n))
-    e = runner._prepare_edges(pr_edges)
-    state = runner._init_state(vertices)
+    e = runner._prepare_edges(pr_edges, pins)
+    state = runner._init_state(vertices, pins)
     state.count()  # materialize the cache exactly as the runner's first
     # action does — an unmaterialized cache makes AQE's initial plan
     # insert a defensive Exchange on the state side that execution
@@ -72,7 +74,7 @@ def main() -> None:
     cc_runner = PregelRunner(
         spark, cc_spec(), steps_per_action=2, num_partitions=runner.num_partitions
     )
-    cc_state = cc_runner._init_state(runner.vertices_from_edges(e))
+    cc_state = cc_runner._init_state(runner.vertices_from_edges(e), pins)
     s1 = cc_runner._one_superstep(cc_state, e, {}, -1).select("id", "value", "active")
     s2 = cc_runner._one_superstep(s1, e, {}, -1).select("id", "value", "active")
     sections.append(("two chained supersteps, one job (steps_per_action=2)", grab(s2)))
@@ -113,7 +115,7 @@ def main() -> None:
     sections.append(
         ("slim superstep (pre-shuffle CollectMetrics, count-free exchange row)", slim_plan)
     )
-    e.unpersist()
+    pins.release_all()
 
     # 3. scale-safe vertex-id assignment: the window is partitioned by
     # _pid (one range partition per task) — NO unpartitioned window, no
